@@ -1,5 +1,5 @@
 """Incremental view maintenance (IVM) over the lake's row-level change
-feed (``sources.lakelog.merge_upsert_cdf`` / ``read_row_changes``).
+feed (``sources.lakelog.merge_apply_cdc`` / ``read_row_changes``).
 
 The maintained view here is the classic self-maintainable family:
 GROUP BY with COUNT / SUM (and anything derivable from them — AVG,

@@ -1895,17 +1895,17 @@ def skew_salted_join_lineitem_supplier(spark: SparkSession, sf_dir: str) -> Data
     "lake_cdc_upsert_compaction", _LATEST_SQL, tags=("S2", "A3", "T5", "lake"), bench=True
 )
 def lake_cdc_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC upserts compacted into a parquet lake table (sources/
-    lake.py:merge_upsert): the events changelog applied as three
-    successive MERGE batches (copy-on-write: existing ∪ batch →
-    latest-per-key → staged swap) must leave the table identical to
-    one latest-per-key pass over the full log — the associativity
-    that lets a 100 TB lake ingest CDC incrementally and still equal
-    the batch rebuild. Same oracle as the TABLE materialization
-    (s2_a3_table_latest_per_key)."""
+    """CDC upserts compacted into a lake table (sources/lakelog.py
+    ``merge_apply_cdc``; the batches carry no op column, so every row
+    upserts): the events changelog applied as three successive MERGE
+    commits (snapshot ∪ batch → latest-per-key) must leave the table
+    identical to one latest-per-key pass over the full log — the
+    associativity that lets a 100 TB lake ingest CDC incrementally
+    and still equal the batch rebuild. Same oracle as the TABLE
+    materialization (s2_a3_table_latest_per_key)."""
     import tempfile
 
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import merge_upsert
+    from kafka_cdc_elasticsearch_pipeline_spark.sources import lakelog
 
     # spread=False: each change batch goes straight into the MERGE's
     # own hash exchange (latest-per-key agg) — the parallelism
@@ -1914,17 +1914,17 @@ def lake_cdc_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3-merge chain 1.78s → 1.03s without it).
     ev = _events(spark, sf_dir, spread=False)
     with tempfile.TemporaryDirectory(prefix="lake_upsert_") as tmp:
-        path = f"{tmp}/events_table"
+        table = f"{tmp}/events_table"
         for i in range(3):
-            merge_upsert(
+            lakelog.merge_apply_cdc(
                 spark,
-                path,
+                table,
                 ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
                 ["user_id"],
                 "ts",
                 tiebreak="event_id",
             )
-        return spark.read.parquet(path).select(*EVENT_COLS).localCheckpoint()
+        return lakelog.read(spark, table).select(*EVENT_COLS).localCheckpoint()
 
 
 @query(
@@ -2230,7 +2230,8 @@ def lake_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_cdc_deletes_tombstone_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC DELETES through the lake MERGE: 'error' events stand in for
-    Debezium op='d' rows. The merge stores a winning delete as a
+    Debezium op='d' rows. The batches carry no op column, so
+    ``lakelog.merge_apply_cdc`` stores a winning delete as a
     TOMBSTONE (a normal last-write-wins row) rather than physically
     removing the key — physical removal would lose the delete's
     (ts, event_id) position and let a late-arriving OLDER update
@@ -2242,28 +2243,25 @@ def lake_cdc_deletes_tombstone_read(spark: SparkSession, sf_dir: str) -> DataFra
     delete-vs-update ordering is genuinely exercised."""
     import tempfile
 
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import (
-        active_rows,
-        merge_upsert,
-    )
+    from kafka_cdc_elasticsearch_pipeline_spark.sources import lakelog
+    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import active_rows
 
     # spread=False: the change batches feed the merge/commit's own
     # hash exchange (see lake_cdc_upsert_compaction, r15).
     ev = _events(spark, sf_dir, spread=False)
     with tempfile.TemporaryDirectory(prefix="lake_del_") as tmp:
-        path = f"{tmp}/events_table"
+        table = f"{tmp}/events_table"
         for i in range(3):
-            merge_upsert(
+            lakelog.merge_apply_cdc(
                 spark,
-                path,
+                table,
                 ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
                 ["user_id"],
                 "ts",
                 tiebreak="event_id",
             )
-        table = spark.read.parquet(path)
         return (
-            active_rows(table, F.col("event_type") == "error")
+            active_rows(lakelog.read(spark, table), F.col("event_type") == "error")
             .select(*EVENT_COLS)
             .localCheckpoint()
         )
@@ -2273,18 +2271,18 @@ def lake_cdc_deletes_tombstone_read(spark: SparkSession, sf_dir: str) -> DataFra
     "lake_versioned_merge_latest",
     _LATEST_SQL,
     tags=("S2", "T5", "lake", "txnlog"),
-    # Benched next to the COW path (lake_cdc_upsert_compaction) so the
-    # txn-log O(1)-commit claim carries a tracked number (r04 verdict #6).
+    # Benched so the txn-log merge commit carries a tracked number
+    # (r04 verdict #6).
     bench=True,
 )
 def lake_versioned_merge_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CDC MERGE as a transaction-log commit (sources/lakelog.py —
     the Delta/Iceberg pattern on stdlib primitives): three change
     batches become versions 1..3, each an atomic manifest commit over
-    immutable data files (no swap window at all — a crash mid-commit
-    leaves the table at its previous version, never absent). Reading
-    the latest version must equal one latest-per-key pass over the
-    whole changelog, same oracle as the directory-swap MERGE."""
+    immutable data files (a crash mid-commit leaves the table at its
+    previous version, never absent). Reading the latest version must
+    equal one latest-per-key pass over the whole changelog, same
+    oracle as lake_cdc_upsert_compaction."""
     import tempfile
 
     from kafka_cdc_elasticsearch_pipeline_spark.sources import lakelog
@@ -2295,7 +2293,7 @@ def lake_versioned_merge_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(prefix="lake_log_") as tmp:
         table = f"{tmp}/events_table"
         for i in range(3):
-            lakelog.merge_upsert_versioned(
+            lakelog.merge_apply_cdc(
                 spark,
                 table,
                 ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
@@ -2335,7 +2333,7 @@ def lake_time_travel_version2(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(prefix="lake_tt_") as tmp:
         table = f"{tmp}/events_table"
         for i in range(3):
-            lakelog.merge_upsert_versioned(
+            lakelog.merge_apply_cdc(
                 spark,
                 table,
                 ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
@@ -2369,7 +2367,7 @@ def lake_time_travel_version2(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_ivm_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance over the row-level CHANGE DATA FEED
-    (Delta CDF pattern, sources/lakelog.py `merge_upsert_cdf`): three
+    (Delta CDF pattern, sources/lakelog.py `merge_apply_cdc`): three
     CDC merge commits each stage their exact signed row deltas
     (insert / update_preimage / update_postimage) alongside the
     snapshot, and a per-channel count+sum view is maintained by
@@ -2397,7 +2395,7 @@ def lake_ivm_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         table = f"{tmp}/events_table"
         view = None
         for i in range(3):
-            lakelog.merge_upsert_cdf(
+            lakelog.merge_apply_cdc(
                 spark,
                 table,
                 ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),

@@ -42,7 +42,9 @@ def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
 def active_rows(table: DataFrame, delete_pred) -> DataFrame:
     """Tombstone-aware read of a CDC lake table: rows matching
     ``delete_pred`` are RETAINED deletes, filtered out of the active
-    view here rather than physically removed by the MERGE.
+    view here rather than physically removed by the MERGE (they land
+    as ordinary rows through ``lakelog.merge_apply_cdc`` with no op
+    column).
 
     Why retain: a delete physically removed at merge time loses its
     (ts, tiebreak) position, so a LATE-arriving older update for the
@@ -53,59 +55,3 @@ def active_rows(table: DataFrame, delete_pred) -> DataFrame:
     vacuum — ``lakelog.vacuum`` on the txn-log path)."""
     return table.filter(~delete_pred)
 
-
-def merge_upsert(
-    spark: SparkSession,
-    path: str,
-    changes: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    tiebreak: str | None = None,
-) -> None:
-    """Copy-on-write MERGE of a CDC change batch into a parquet lake
-    table: existing ∪ changes → latest-per-key → staged rewrite →
-    swap. The lakehouse counterpart of the keyed ES sink (doc-id
-    overwrite ≙ key merge) and the batch form of the reference's
-    TABLE materialization.
-
-    This is the format-agnostic COW pattern; a production lake
-    delegates the swap to a table format's transaction log (Delta/
-    Iceberg) and rewrites only the touched files. Semantics — dedup by
-    (ts, tiebreak) last-write-wins — are identical, which is what the
-    gate row checks.
-    """
-    import os
-    import shutil
-
-    from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
-
-    staging = path.rstrip("/") + ".__staging__"
-    old = path.rstrip("/") + ".__old__"
-    # Crash recovery BEFORE reading: a previous run that died between
-    # its two swap renames left `path` absent and the full table parked
-    # at `old` — roll that swap back first, or this merge would treat
-    # the table as empty AND the rmtree below would delete the only
-    # surviving full copy (round-4 review finding).
-    if not os.path.exists(path) and os.path.exists(old):
-        os.replace(old, path)
-    if os.path.exists(path):
-        merged = spark.read.parquet(path).unionByName(changes)
-    else:
-        merged = changes
-    result = latest_per_key(merged, list(keys), ts_col, tiebreak=tiebreak)
-    result.write.mode("overwrite").parquet(staging)
-    # Swap via rename-aside (ADVICE r03): the old rmtree(path) →
-    # replace(staging, path) sequence had a window with NO table at
-    # `path` — a crash there lost the table (data stranded in
-    # .__staging__), and concurrent readers errored. Now a valid table
-    # exists at every step: park the old dir aside, one atomic rename
-    # brings the new table live, then delete the parked copy. A crash
-    # between the renames leaves `path` momentarily absent for at most
-    # one rename (not a full delete+rewrite), both generations still on
-    # disk, and the recovery branch above completes the rollback on the
-    # next call.
-    shutil.rmtree(old, ignore_errors=True)  # superseded prior generation
-    if os.path.exists(path):
-        os.replace(path, old)
-    os.replace(staging, path)
-    shutil.rmtree(old, ignore_errors=True)

@@ -1,8 +1,7 @@
 """Versioned lake table with a transaction log — the Delta/Iceberg
 commit pattern reduced to its load-bearing core, stdlib-only.
 
-The round-3/4 ``merge_upsert`` gives copy-on-write semantics with a
-directory swap; this module upgrades the commit to a LOG:
+Every commit — append, CDC merge, compaction — goes through a LOG:
 
     <table>/
       _log/00000000000000000001.json   one manifest per version
@@ -602,7 +601,7 @@ def commit(
     (:func:`metadata_stats`).
 
     ``change_dir``: a pre-staged row-level change-data-feed directory
-    (see :func:`merge_upsert_cdf`) recorded in the manifest so
+    (see :func:`merge_apply_cdc`) recorded in the manifest so
     :func:`read_row_changes` can serve this commit's deltas without
     diffing snapshots. Like data dirs, it must be staged BEFORE the
     manifest links it — the commit stays atomic-at-the-manifest.
@@ -734,146 +733,8 @@ def _link_version(
     return version
 
 
-def merge_upsert_versioned(
-    spark: SparkSession,
-    table: str,
-    changes: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    tiebreak: str | None = None,
-    max_retries: int = 3,
-    stat_cols: Sequence[str] | None = None,
-) -> int:
-    """CDC MERGE as a versioned commit: latest snapshot ∪ changes →
-    latest-per-key → commit as version N+1. Prior versions remain
-    readable (time travel). On a concurrent-writer conflict the merge
-    re-reads the new latest snapshot and retries — last-write-wins by
-    (ts, tiebreak) makes the retry convergent."""
-    from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
-
-    for _ in range(max_retries + 1):
-        parent = latest_version(table)
-        if parent is None:
-            merged = changes
-        else:
-            merged = read(spark, table, parent).unionByName(changes)
-        result = latest_per_key(merged, list(keys), ts_col, tiebreak=tiebreak)
-        try:
-            return commit(
-                table,
-                result,
-                "merge_upsert",
-                expect_parent=parent,
-                stat_cols=stat_cols,
-            )
-        except CommitConflict:
-            continue
-    raise CommitConflict(f"merge into {table} lost {max_retries + 1} races")
-
-
 #: Row-level change types (Delta Change Data Feed vocabulary).
 CHANGE_TYPES = ("insert", "update_preimage", "update_postimage", "delete")
-
-
-def merge_upsert_cdf(
-    spark: SparkSession,
-    table: str,
-    changes: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    tiebreak: str | None = None,
-    max_retries: int = 3,
-    stat_cols: Sequence[str] | None = None,
-    txn: tuple[str, int] | None = None,
-) -> int:
-    """CDC MERGE with a row-level CHANGE DATA FEED (Delta CDF): commits
-    the merged snapshot like :func:`merge_upsert_versioned` AND stages
-    the commit's row-level deltas — ``_change_type`` ∈ ``insert`` /
-    ``update_preimage`` / ``update_postimage`` — into a change
-    directory the manifest references, so downstream consumers
-    (:func:`read_row_changes`) get exact signed deltas without ever
-    diffing snapshots.
-
-    The deltas are computed from rows the merge TOUCHES anyway: only
-    keys present in the change batch can change, so the old/new
-    comparison joins the parent snapshot and the merge result against
-    the batch's distinct keys (batch-sized, broadcastable), never
-    snapshot × snapshot. A change row that loses the (ts, tiebreak)
-    race produces NO feed rows — the feed records what happened to the
-    TABLE, not what the producer attempted. Deletes don't arise here
-    (this merge is upsert-only; the tombstone flow models deletes).
-
-    At 100 TB this is what makes incremental downstream maintenance
-    (:mod:`..operators.ivm`) possible: consumers apply O(changed rows)
-    per commit instead of recomputing over O(table).
-
-    ``txn`` — ``(app_id, batch_id)`` — recorded in the manifest like
-    :func:`commit`'s; a sink can read the watermark back and skip a
-    redelivered batch BEFORE merging (see
-    ``streaming.lake_sink.lake_ivm_sink``) instead of relying on the
-    merge being a value-level no-op, which would still burn a source
-    version per replay."""
-    from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
-
-    key_list = list(keys)
-    for _ in range(max_retries + 1):
-        parent = latest_version(table)
-        if parent is None:
-            result = latest_per_key(changes, key_list, ts_col, tiebreak=tiebreak)
-            feed = result.select(
-                "*", F.lit("insert").alias("_change_type")
-            )
-        else:
-            snap = read(spark, table, parent)
-            result = latest_per_key(
-                snap.unionByName(changes), key_list, ts_col, tiebreak=tiebreak
-            )
-            batch_keys = changes.select(*key_list).distinct()
-            data_cols = [c for c in result.columns if c not in key_list]
-            old = snap.join(batch_keys, key_list).select(
-                *key_list, F.struct(*data_cols).alias("__old")
-            )
-            new = result.join(batch_keys, key_list).select(
-                *key_list, F.struct(*data_cols).alias("__new")
-            )
-            pair = new.join(old, key_list, "left")
-            inserts = pair.filter(F.col("__old").isNull()).select(
-                *key_list,
-                F.col("__new.*"),
-                F.lit("insert").alias("_change_type"),
-            )
-            changed = pair.filter(
-                F.col("__old").isNotNull()
-                & ~F.col("__old").eqNullSafe(F.col("__new"))
-            )
-            pre = changed.select(
-                *key_list,
-                F.col("__old.*"),
-                F.lit("update_preimage").alias("_change_type"),
-            )
-            post = changed.select(
-                *key_list,
-                F.col("__new.*"),
-                F.lit("update_postimage").alias("_change_type"),
-            )
-            feed = inserts.unionByName(pre).unionByName(post)
-        change_dir = f"changes-{uuid.uuid4().hex}"
-        feed.write.mode("errorifexists").parquet(os.path.join(table, change_dir))
-        try:
-            return commit(
-                table,
-                result,
-                "merge_upsert",
-                expect_parent=parent,
-                stat_cols=stat_cols,
-                change_dir=change_dir,
-                txn=txn,
-            )
-        except CommitConflict:
-            # staged data + change dirs are unreferenced debris;
-            # vacuum reclaims them like any crashed commit's
-            continue
-    raise CommitConflict(f"merge into {table} lost {max_retries + 1} races")
 
 
 def merge_apply_cdc(
@@ -889,8 +750,8 @@ def merge_apply_cdc(
     stat_cols: Sequence[str] | None = None,
     txn: tuple[str, int] | None = None,
 ) -> int:
-    """CDC APPLY with a change feed: :func:`merge_upsert_cdf` plus ROW
-    DELETION — the full Debezium op stream (c/u/r upsert, d delete)
+    """CDC MERGE as a versioned commit with a row-level CHANGE DATA
+    FEED — the full Debezium op stream (c/u/r upsert, d delete)
     applied to a lake table the way the reference pipeline's connector
     applies it to its search index (a delete event removes the
     document; reference `ksqldb-statements.sql` models it as the
@@ -898,28 +759,51 @@ def merge_apply_cdc(
     snapshot row ∪ batch rows) by ``(ts_col, tiebreak)``; a winner
     whose ``op_col`` ∈ ``delete_ops`` REMOVES the key, any other
     winner upserts it (``op_col`` itself never lands in the table).
+    A batch WITHOUT ``op_col`` is upsert-only: every row upserts.
+    Keys match null-safely — a NULL key is one key, as in
+    ``latest_per_key``.
+
+    Deletes are physical, so changes to one key must arrive in
+    ``(ts, tiebreak)`` order ACROSS batches: a late change older than
+    a delete would re-insert the key. A stream that can deliver such
+    late changes keeps its deletes as ordinary tombstone rows (no
+    ``op_col``) and reads through ``lake.active_rows``.
 
     The staged feed records what happened to the TABLE: ``insert`` /
     ``update_preimage``+``postimage`` / ``delete`` (the full old row,
     so downstream signed folds — IVM views, the BM25 index — subtract
     exactly what the table lost). A delete of an absent key, or any
     change that loses the (ts, tiebreak) race to the snapshot row,
-    produces no feed row and no snapshot change.
+    produces no feed row and no snapshot change; consumers read it
+    with :func:`read_row_changes`.
 
-    Same scale shape as :func:`merge_upsert_cdf`: every feed join is
-    against the batch's distinct keys (batch-sized, broadcastable),
-    never snapshot × snapshot; the snapshot rewrite itself is the COW
-    fallback path, not the ingest path. ``txn`` as in
-    :func:`merge_upsert_cdf` — read the watermark back to skip a
-    redelivered batch BEFORE merging."""
+    Scale shape: only keys present in the batch can change, so the
+    snapshot meets the batch only through semi/anti joins against the
+    broadcast batch keys, and ONE batch-sized per-key reduce yields
+    both the table's new rows and the feed; never snapshot ×
+    snapshot. The snapshot rewrite itself is the COW fallback path,
+    not the ingest path. Prior versions stay readable (time travel).
+    On a concurrent-writer conflict the merge re-reads the new head
+    and retries — last-write-wins makes the retry convergent.
+
+    ``txn`` — ``(app_id, batch_id)`` — is recorded in the manifest like
+    :func:`commit`'s; a sink reads the watermark back to skip a
+    redelivered batch BEFORE merging (see ``lake_sink.lake_ivm_sink``)
+    instead of burning a version on a no-op merge."""
     from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
 
+    if op_col not in changes.columns:  # upsert-only batch
+        changes = changes.select("*", F.lit(None).cast("string").alias(op_col))
     key_list = list(keys)
+    # the batch side of every key join carries renamed keys, so the
+    # null-safe conditions resolve by name without self-join ambiguity
+    batch_key = [f"__key_{i}" for i in range(len(key_list))]
+    on = [F.col(k).eqNullSafe(F.col(b)) for k, b in zip(key_list, batch_key)]
     op_type = changes.schema[op_col].dataType
+    ord_cols = [ts_col] + ([tiebreak] if tiebreak else [])
     is_del = F.col(op_col).isin(list(delete_ops))
     for _ in range(max_retries + 1):
         parent = latest_version(table)
-        batch_keys = changes.select(*key_list).distinct()
         if parent is None:
             winners = latest_per_key(changes, key_list, ts_col, tiebreak=tiebreak)
             result = winners.filter(~F.coalesce(is_del, F.lit(False))).drop(
@@ -928,56 +812,76 @@ def merge_apply_cdc(
             feed = result.select("*", F.lit("insert").alias("_change_type"))
         else:
             snap = read(spark, table, parent)
+            # broadcast: a batch's keys carry no size statistics, and a
+            # shuffled join would move the whole snapshot; semi/anti
+            # joins tolerate repeated keys, so no distinct shuffle
+            batch_keys = F.broadcast(changes.select(
+                *[F.col(k).alias(b) for k, b in zip(key_list, batch_key)]
+            ))
+            data_cols = [c for c in snap.columns if c not in key_list]
             # incumbents compete with op=NULL (never a delete); only
             # batch keys can change, so the per-key reduce is batch-sized
-            incumbents = snap.join(batch_keys, key_list, "left_semi").select(
-                "*", F.lit(None).cast(op_type).alias(op_col)
+            incumbents = snap.join(batch_keys, on, "left_semi").select(
+                "*",
+                F.lit(None).cast(op_type).alias(op_col),
+                F.lit(True).alias("__inc"),
             )
-            winners = latest_per_key(
-                incumbents.unionByName(changes), key_list, ts_col,
-                tiebreak=tiebreak,
+            # one reduce yields latest_per_key's winner AND the incumbent
+            # rows it replaces, so the feed needs no join back
+            per_key = (
+                incumbents.unionByName(
+                    changes.select("*", F.lit(False).alias("__inc"))
+                )
+                .groupBy(*key_list)
+                .agg(
+                    F.max_by(
+                        F.struct(*snap.columns, op_col), F.struct(*ord_cols)
+                    ).alias("__win"),
+                    F.collect_list(
+                        F.when(F.col("__inc"), F.struct(*data_cols))
+                    ).alias("__olds"),
+                )
+                .select(
+                    *key_list,
+                    F.when(
+                        ~F.coalesce(F.col("__win").getField(op_col).isin(
+                            list(delete_ops)), F.lit(False)),
+                        F.struct(*[F.col("__win").getField(c).alias(c)
+                                   for c in data_cols]),
+                    ).alias("__new"),
+                    "__olds",
+                )
             )
-            survivors = winners.filter(
-                ~F.coalesce(is_del, F.lit(False))
-            ).drop(op_col)
-            result = snap.join(batch_keys, key_list, "left_anti").unionByName(
-                survivors
+            result = snap.join(batch_keys, on, "left_anti").unionByName(
+                per_key.filter(F.col("__new").isNotNull()).select(
+                    *key_list, "__new.*"
+                )
             )
-            data_cols = [c for c in snap.columns if c not in key_list]
-            old = snap.join(batch_keys, key_list).select(
-                *key_list, F.struct(*data_cols).alias("__old")
-            )
-            new = survivors.select(
-                *key_list, F.struct(*data_cols).alias("__new")
-            )
-            pair = old.join(new, key_list, "full")
-            inserts = pair.filter(
-                F.col("__old").isNull() & F.col("__new").isNotNull()
-            ).select(
-                *key_list, F.col("__new.*"), F.lit("insert").alias("_change_type")
-            )
-            deletes = pair.filter(
-                F.col("__old").isNotNull() & F.col("__new").isNull()
-            ).select(
-                *key_list, F.col("__old.*"), F.lit("delete").alias("_change_type")
-            )
-            changed = pair.filter(
-                F.col("__old").isNotNull()
-                & F.col("__new").isNotNull()
-                & ~F.col("__old").eqNullSafe(F.col("__new"))
-            )
-            pre = changed.select(
-                *key_list,
-                F.col("__old.*"),
-                F.lit("update_preimage").alias("_change_type"),
-            )
-            post = changed.select(
-                *key_list,
-                F.col("__new.*"),
-                F.lit("update_postimage").alias("_change_type"),
+
+            def row(side, change_type):
+                return F.struct(
+                    F.col(side).alias("__row"),
+                    F.lit(change_type).alias("_change_type"),
+                )
+
+            old, new = F.col("__old"), F.col("__new")
+            changes_of_pair = (
+                F.when(old.isNull() & new.isNotNull(), F.array(row("__new", "insert")))
+                .when(old.isNotNull() & new.isNull(), F.array(row("__old", "delete")))
+                .when(
+                    old.isNotNull() & new.isNotNull() & ~old.eqNullSafe(new),
+                    F.array(
+                        row("__old", "update_preimage"),
+                        row("__new", "update_postimage"),
+                    ),
+                )
             )
             feed = (
-                inserts.unionByName(pre).unionByName(post).unionByName(deletes)
+                per_key.select(
+                    *key_list, "__new", F.explode_outer("__olds").alias("__old")
+                )
+                .select(*key_list, F.explode(changes_of_pair).alias("__c"))
+                .select(*key_list, "__c.__row.*", "__c._change_type")
             )
         change_dir = f"changes-{uuid.uuid4().hex}"
         feed.write.mode("errorifexists").parquet(os.path.join(table, change_dir))
@@ -1006,12 +910,12 @@ def read_row_changes(
 ) -> DataFrame:
     """Row-level change feed for versions ``(from_version, to_version]``
     — the CDF superset of :func:`read_changes`: every row carries
-    ``_change_type`` (insert / update_preimage / update_postimage) and
-    ``_commit_version``. Commits made by :func:`merge_upsert_cdf`
+    ``_change_type`` (insert / update_preimage / update_postimage /
+    delete) and ``_commit_version``. Commits made by :func:`merge_apply_cdc`
     serve their staged change dir; plain ``append``/``txn_append``
     commits synthesize ``insert`` rows from their delta dirs (an
     append IS its own change feed); any other commit without a change
-    dir (merge without CDF, compact, purge) raises — the feed refuses
+    dir (a plain :func:`commit` rewrite, purge) raises — the feed refuses
     to guess, same contract as :func:`read_changes`. A range whose
     manifests or change dirs :func:`vacuum` has reclaimed raises the
     same re-read-snapshot ValueError rather than a raw path error."""
@@ -1275,7 +1179,7 @@ def read_changes(
     downstream training jobs stream OUT of it by version.
 
     Only ``append``/``txn_append`` commits are incremental; an
-    intervening rewrite commit (merge_upsert/purge) changes history
+    intervening rewrite commit (merge/purge) changes history
     non-additively, and this reader refuses to guess — ``ValueError``
     tells the consumer to re-read the snapshot and resume from there.
     Layout-only rewrites (compact / Z-order) record

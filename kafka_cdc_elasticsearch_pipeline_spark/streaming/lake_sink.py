@@ -13,10 +13,8 @@ API a pipeline author actually mounts:
   ``lakelog.txn_append_commit``, so a replayed/redelivered micro-batch
   is recognized by the table's manifest watermark and skipped
   atomically (Delta txnAppId/txnVersion twin).
-- ``lake_merge_sink``: CDC MERGE — ``merge_upsert_versioned`` is
-  last-write-wins by (ts, tiebreak), which makes redelivery a no-op by
-  VALUE rather than by watermark; use it when batches are updates, not
-  immutable events.
+- ``lake_ivm_sink``: CDC MERGE (``lakelog.merge_apply_cdc``) plus a
+  maintained group-by view folded from each commit's change feed.
 
 ``app_id`` IDENTIFIES A CHECKPOINT LINEAGE, not an application: the
 watermark skip (``batch_id <= recorded``) assumes batch ids from one
@@ -79,24 +77,6 @@ def lake_append_sink(
     return sink
 
 
-def lake_merge_sink(
-    spark: SparkSession,
-    table: str,
-    keys: Sequence[str],
-    ts_col: str,
-    tiebreak: str | None = None,
-):
-    """foreachBatch callable: versioned CDC MERGE of each micro-batch
-    (last-write-wins upsert; replays converge by value)."""
-
-    def sink(batch_df: DataFrame, batch_id: int):
-        return lakelog.merge_upsert_versioned(
-            spark, table, batch_df, keys, ts_col, tiebreak=tiebreak
-        )
-
-    return sink
-
-
 def lake_ivm_sink(
     spark: SparkSession,
     source_table: str,
@@ -109,7 +89,7 @@ def lake_ivm_sink(
     app_id: str = "ivm",
 ):
     """foreachBatch callable: CDC MERGE with change-data-feed
-    (``merge_upsert_cdf``) into ``source_table``, then fold the
+    (``lakelog.merge_apply_cdc``) into ``source_table``, then fold the
     commit's signed row deltas into a MAINTAINED group-by view
     (``view_table`` — itself a versioned lakelog table), so the view
     follows the stream at O(changed rows) per micro-batch while the
@@ -145,7 +125,7 @@ def lake_ivm_sink(
         if batch_id <= src_wm:
             v = src_head  # redelivered batch: the merge already landed
         else:
-            v = lakelog.merge_upsert_cdf(
+            v = lakelog.merge_apply_cdc(
                 spark, source_table, batch_df, keys, ts_col,
                 tiebreak=tiebreak, txn=(app_id, batch_id),
             )

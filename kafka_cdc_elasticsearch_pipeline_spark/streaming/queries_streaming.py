@@ -1137,8 +1137,8 @@ def t6_watermark_late_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lake_streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production T5 deployment shape end-to-end: a StreamingQuery
-    whose foreachBatch MERGEs each CDC micro-batch into a parquet lake
-    table (sources/lake.py copy-on-write upsert, rename-aside swap) —
+    whose foreachBatch MERGEs each CDC micro-batch into a lake table
+    (``lakelog.merge_apply_cdc``, upsert-only: no op column) —
     killed after 3 of 6 micro-batches and restarted from the same
     checkpoint. The final LAKE TABLE must equal the one-shot batch
     latest-per-key. Two guarantees fold together here: offset resume
@@ -1149,7 +1149,7 @@ def lake_streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import merge_upsert
+    from kafka_cdc_elasticsearch_pipeline_spark.sources import lakelog
     from kafka_cdc_elasticsearch_pipeline_spark.streaming.recovery import (
         open_stream,
         reveal,
@@ -1164,7 +1164,7 @@ def lake_streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         table = os.path.join(tmp, "lake_table")
 
         def sink(batch_df, batch_id):
-            merge_upsert(
+            lakelog.merge_apply_cdc(
                 spark, table, batch_df, keys=["user_id"], ts_col="ts",
                 tiebreak="event_id",
             )
@@ -1185,7 +1185,7 @@ def lake_streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         reveal(tmp, parts[3:])
         run()  # restart: resumes offsets, re-merges idempotently
         return (
-            spark.read.parquet(table)
+            lakelog.read(spark, table)
             .select(*EVENT_COLS)
             .localCheckpoint(eager=True)
         )

@@ -1,4 +1,4 @@
-"""Row-level change data feed (lakelog.merge_upsert_cdf /
+"""Row-level change data feed (lakelog.merge_apply_cdc /
 read_row_changes) and incremental view maintenance (operators/ivm.py):
 the feed must record exactly what happened to the TABLE (inserts,
 pre/post update pairs, nothing for lost races), and the maintained
@@ -25,7 +25,7 @@ def _batch(spark, rows):
 
 def test_first_cdf_commit_is_all_inserts(spark, tmp_path):
     table = str(tmp_path / "t")
-    lakelog.merge_upsert_cdf(
+    lakelog.merge_apply_cdc(
         spark, table,
         _batch(spark, [(1, 10, 100, "a", 1.0), (2, 10, 101, "b", 2.0)]),
         ["user_id"], "ts", tiebreak="event_id",
@@ -38,14 +38,14 @@ def test_first_cdf_commit_is_all_inserts(spark, tmp_path):
 
 def test_update_emits_pre_post_pair_and_lost_race_emits_nothing(spark, tmp_path):
     table = str(tmp_path / "t")
-    lakelog.merge_upsert_cdf(
+    lakelog.merge_apply_cdc(
         spark, table,
         _batch(spark, [(1, 10, 100, "a", 1.0), (2, 50, 101, "b", 2.0)]),
         ["user_id"], "ts", tiebreak="event_id",
     )
     # user 1: newer ts -> real update; user 2: OLDER ts -> loses, no feed
     # user 3: unseen -> insert
-    lakelog.merge_upsert_cdf(
+    lakelog.merge_apply_cdc(
         spark, table,
         _batch(spark, [(1, 20, 102, "c", 5.0), (2, 40, 103, "b", 9.0),
                        (3, 10, 104, "a", 7.0)]),
@@ -76,15 +76,12 @@ def test_append_commit_synthesizes_insert_feed(spark, tmp_path):
 
 def test_row_changes_refuses_commits_without_feed(spark, tmp_path):
     table = str(tmp_path / "t")
-    lakelog.merge_upsert_cdf(
+    lakelog.merge_apply_cdc(
         spark, table, _batch(spark, [(1, 10, 100, "a", 1.0)]),
         ["user_id"], "ts", tiebreak="event_id",
     )
-    # a non-CDF merge commit in the middle of the range
-    lakelog.merge_upsert_versioned(
-        spark, table, _batch(spark, [(1, 20, 101, "b", 2.0)]),
-        ["user_id"], "ts", tiebreak="event_id",
-    )
+    # a feed-less rewrite commit in the middle of the range
+    lakelog.commit(table, _batch(spark, [(1, 20, 101, "b", 2.0)]), "overwrite")
     with pytest.raises(ValueError, match="without\na change feed|without a change feed"):
         lakelog.read_row_changes(spark, table, 1, 2)
 
@@ -96,7 +93,7 @@ def test_ivm_equals_recompute_after_every_commit(spark, sf_dir, tmp_path):
     table = str(tmp_path / "events_table")
     view = None
     for i in range(3):
-        lakelog.merge_upsert_cdf(
+        lakelog.merge_apply_cdc(
             spark, table,
             ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
             ["user_id"], "ts", tiebreak="event_id",
@@ -142,11 +139,11 @@ def test_delta_aggregate_rejects_unknown_change_type(spark):
 
 def test_vacuum_keeps_kept_versions_change_dirs(spark, tmp_path):
     table = str(tmp_path / "t")
-    lakelog.merge_upsert_cdf(
+    lakelog.merge_apply_cdc(
         spark, table, _batch(spark, [(1, 10, 100, "a", 1.0)]),
         ["user_id"], "ts", tiebreak="event_id",
     )
-    lakelog.merge_upsert_cdf(
+    lakelog.merge_apply_cdc(
         spark, table, _batch(spark, [(1, 20, 101, "b", 2.0)]),
         ["user_id"], "ts", tiebreak="event_id",
     )
@@ -224,7 +221,7 @@ def test_ivm_sink_catches_up_after_crash_between_commits(spark, tmp_path):
     )
     sink(_batch(spark, [(1, 10, 100, "a", 1.0)]), 0)
     # "crash": the merge commits but the fold never runs
-    lakelog.merge_upsert_cdf(
+    lakelog.merge_apply_cdc(
         spark, src, _batch(spark, [(2, 10, 101, "b", 2.0)]),
         ["user_id"], "ts", tiebreak="event_id",
     )
@@ -265,12 +262,12 @@ def test_feed_skips_content_identical_compact(spark, tmp_path):
     only the real changes, and a range holding ONLY the compact is a
     zero-row feed, not an error."""
     table = str(tmp_path / "t")
-    lakelog.merge_upsert_cdf(
+    lakelog.merge_apply_cdc(
         spark, table, _batch(spark, [(1, 10, 100, "a", 1.0)]),
         ["user_id"], "ts", tiebreak="event_id",
     )
     lakelog.compact(spark, table)  # version 2, layout-only
-    lakelog.merge_upsert_cdf(
+    lakelog.merge_apply_cdc(
         spark, table, _batch(spark, [(1, 20, 101, "b", 2.0)]),
         ["user_id"], "ts", tiebreak="event_id",
     )
@@ -438,3 +435,120 @@ def test_merge_apply_cdc_feed_folds_in_ivm(spark, tmp_path):
         .collect()
     }
     assert got == want == {"a": (1, 1.0), "b": (1, 9.0)}
+
+
+def test_merge_apply_cdc_without_op_column_upserts(spark, tmp_path):
+    """A batch without ``_op`` is upsert-only: every row upserts (a
+    channel of "d" is data, not a delete) and no ``_op`` column lands
+    in the table or its feed."""
+    table = str(tmp_path / "t")
+    lakelog.merge_apply_cdc(
+        spark, table,
+        _batch(spark, [(1, 10, 100, "a", 1.0), (2, 10, 101, "b", 2.0)]),
+        ["user_id"], "ts", tiebreak="event_id",
+    )
+    lakelog.merge_apply_cdc(
+        spark, table,
+        _batch(spark, [(1, 20, 102, "d", 5.0), (3, 10, 103, "c", 3.0)]),
+        ["user_id"], "ts", tiebreak="event_id",
+    )
+    snap = lakelog.read(spark, table)
+    assert "_op" not in snap.columns
+    assert {r.user_id: r.channel for r in snap.collect()} == {
+        1: "d", 2: "b", 3: "c"
+    }
+    feed = lakelog.read_row_changes(spark, table, 1, 2)
+    assert "_op" not in feed.columns
+    assert {(r._change_type, r.user_id) for r in feed.collect()} == {
+        ("update_preimage", 1), ("update_postimage", 1), ("insert", 3)
+    }
+
+
+def test_merge_apply_cdc_null_key_is_one_key(spark, tmp_path):
+    """A NULL key is ONE key, as ``latest_per_key`` groups it: a second
+    merge of the NULL-keyed row replaces it (one row, an update
+    pre/post pair in the feed) instead of adding a copy, and a delete
+    of the NULL key removes it."""
+    table = str(tmp_path / "t")
+    schema = "user_id bigint, ts bigint, v string, _op string"
+
+    def merge(rows):
+        lakelog.merge_apply_cdc(
+            spark, table, spark.createDataFrame(rows, schema), ["user_id"], "ts"
+        )
+
+    merge([(None, 10, "n1", "c"), (1, 10, "a", "c")])
+    merge([(None, 20, "n2", "u")])
+    rows = lakelog.read(spark, table).collect()
+    assert sorted((r.user_id is None, r.ts, r.v) for r in rows) == [
+        (False, 10, "a"), (True, 20, "n2")
+    ]
+    feed = lakelog.read_row_changes(spark, table, 1, 2).collect()
+    assert sorted((r._change_type, r.user_id, r.v) for r in feed) == [
+        ("update_postimage", None, "n2"), ("update_preimage", None, "n1")
+    ]
+
+    merge([(None, 30, None, "d")])
+    assert [r.user_id for r in lakelog.read(spark, table).collect()] == [1]
+    feed = lakelog.read_row_changes(spark, table, 2, 3).collect()
+    assert [(r._change_type, r.user_id, r.v) for r in feed] == [
+        ("delete", None, "n2")
+    ]
+
+
+def test_merge_apply_cdc_repeated_batch_keys_against_snapshot(spark, tmp_path):
+    """Several changes to one key inside a batch that meets an existing
+    snapshot reduce to the latest by (ts, tiebreak): one pre/post pair
+    for the updated key, nothing for a key inserted then deleted in the
+    batch, nothing for a key whose changes all lose to the snapshot."""
+    table = str(tmp_path / "t")
+    lakelog.merge_apply_cdc(
+        spark, table,
+        _cdc(spark, [(1, 10, 100, "a", 1.0, "c"), (2, 50, 101, "b", 2.0, "c")]),
+        ["user_id"], "ts", tiebreak="event_id",
+    )
+    lakelog.merge_apply_cdc(
+        spark, table,
+        _cdc(spark, [
+            (1, 20, 102, "b", 2.0, "u"), (1, 30, 103, "c", 3.0, "u"),
+            (1, 25, 104, "d", 4.0, "u"),
+            (2, 20, 105, "x", 0.0, "u"), (2, 30, 106, "x", 0.0, "d"),
+            (3, 10, 107, "a", 7.0, "c"), (3, 20, 108, "a", 7.0, "d"),
+        ]),
+        ["user_id"], "ts", tiebreak="event_id",
+    )
+    snap = {r.user_id: r for r in lakelog.read(spark, table).collect()}
+    assert set(snap) == {1, 2}
+    assert snap[1].value == 3.0 and snap[1].channel == "c"
+    assert snap[2].value == 2.0
+    feed = sorted(
+        (r._change_type, r.user_id, r.value)
+        for r in lakelog.read_row_changes(spark, table, 1, 2).collect()
+    )
+    assert feed == [("update_postimage", 1, 3.0), ("update_preimage", 1, 1.0)]
+
+
+def test_merge_apply_cdc_broadcasts_batch_keys(spark, tmp_path, monkeypatch):
+    """The snapshot meets the batch only through joins against the
+    broadcast batch keys: a batch built from local rows carries no size
+    statistics, and a shuffled join would move the whole snapshot."""
+    table = str(tmp_path / "t")
+    lakelog.merge_apply_cdc(
+        spark, table, _cdc(spark, [(1, 10, 100, "a", 1.0, "c")]),
+        ["user_id"], "ts", tiebreak="event_id",
+    )
+    plans = []
+    real_commit = lakelog.commit
+
+    def spying_commit(tbl, df, op, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real_commit(tbl, df, op, **kw)
+
+    monkeypatch.setattr(lakelog, "commit", spying_commit)
+    lakelog.merge_apply_cdc(
+        spark, table, _cdc(spark, [(1, 20, 101, "b", 2.0, "u")]),
+        ["user_id"], "ts", tiebreak="event_id",
+    )
+    (plan,) = plans
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan

@@ -1,5 +1,6 @@
 """Partitioned-lake writes: date predicates must prune directories
-(PartitionFilters), not just row groups."""
+(PartitionFilters), not just row groups. Plus the CDC lake merge's
+batch equivalence and tombstone reads (``lake.active_rows``)."""
 
 from __future__ import annotations
 
@@ -37,42 +38,6 @@ def test_partitioned_roundtrip_complete(spark, sf_dir, tmp_path):
     assert read_partitioned(spark, path).count() == ev.count()
 
 
-def test_merge_upsert_recovers_interrupted_swap(spark, sf_dir, tmp_path):
-    """Crash between the two swap renames (table parked at .__old__,
-    nothing at `path`): the next merge must roll the swap back and
-    merge against the FULL prior generation — not treat the table as
-    empty and delete the only surviving copy (round-4 review
-    finding)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import merge_upsert
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_table_crash")
-    merge_upsert(
-        spark, path, ev.filter(F.col("event_id") % 2 == 0),
-        ["user_id"], "ts", tiebreak="event_id",
-    )
-    # simulate the mid-swap crash: generation parked aside, path gone
-    os.replace(path, path + ".__old__")
-    assert not os.path.exists(path)
-    merge_upsert(
-        spark, path, ev.filter(F.col("event_id") % 2 == 1),
-        ["user_id"], "ts", tiebreak="event_id",
-    )
-    merged = spark.read.parquet(path)
-    expect = latest_per_key(ev, ["user_id"], "ts", tiebreak="event_id")
-    cols = sorted(merged.columns)
-    assert sorted(tuple(r) for r in merged.select(*cols).collect()) == sorted(
-        tuple(r) for r in expect.select(*cols).collect()
-    )
-    assert not os.path.exists(path + ".__old__")
-
-
 def test_merge_upsert_incremental_equals_batch(spark, sf_dir, tmp_path):
     """Three-batch CDC merge == one-shot latest-per-key (associativity
     of last-write-wins), and a re-merge of an already-applied batch is
@@ -80,211 +45,72 @@ def test_merge_upsert_incremental_equals_batch(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import merge_upsert
+    from kafka_cdc_elasticsearch_pipeline_spark.sources import lakelog
     from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
-    path = str(tmp_path / "events_table")
+    table = str(tmp_path / "events_table")
     for i in range(3):
-        merge_upsert(
-            spark, path, ev.filter(F.pmod("event_id", F.lit(3)) == i),
+        lakelog.merge_apply_cdc(
+            spark, table, ev.filter(F.pmod("event_id", F.lit(3)) == i),
             ["user_id"], "ts", tiebreak="event_id",
         )
-    merged = spark.read.parquet(path)
+    merged = lakelog.read(spark, table)
     expect = latest_per_key(ev, ["user_id"], "ts", tiebreak="event_id")
     cols = sorted(merged.columns)
     assert sorted(tuple(r) for r in merged.select(*cols).collect()) == sorted(
         tuple(r) for r in expect.select(*cols).collect()
     )
     # idempotent redelivery: re-applying batch 0 changes nothing
-    merge_upsert(
-        spark, path, ev.filter(F.pmod("event_id", F.lit(3)) == 0),
+    lakelog.merge_apply_cdc(
+        spark, table, ev.filter(F.pmod("event_id", F.lit(3)) == 0),
         ["user_id"], "ts", tiebreak="event_id",
     )
-    again = spark.read.parquet(path)
+    again = lakelog.read(spark, table)
     assert sorted(tuple(r) for r in again.select(*cols).collect()) == sorted(
         tuple(r) for r in expect.select(*cols).collect()
     )
-
-
-def _crash_nth(monkeypatch, module, attr, nth):
-    """Monkeypatch ``module.attr`` to raise on its ``nth`` call —
-    the crash-injection primitive for the swap-window tests."""
-    real = getattr(module, attr)
-    state = {"n": 0}
-
-    def wrapper(*a, **k):
-        state["n"] += 1
-        if state["n"] == nth:
-            raise RuntimeError("injected crash")
-        return real(*a, **k)
-
-    monkeypatch.setattr(module, attr, wrapper)
-    return state
-
-
-def _rows(df):
-    cols = sorted(df.columns)
-    return sorted(tuple(r) for r in df.select(*cols).collect())
-
-
-def test_merge_upsert_crash_between_renames_recovers(spark, sf_dir, tmp_path, monkeypatch):
-    """REAL crash injection in the park-aside window (r04 verdict #4):
-    merge_upsert dies after `path -> .__old__` but before
-    `.__staging__ -> path`. Invariant in the crashed state: the full
-    previous generation is still on disk (parked); the next merge
-    rolls the swap back and converges to the correct table."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import merge_upsert
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    b1 = ev.filter(F.col("event_id") % 2 == 0)
-    b2 = ev.filter(F.col("event_id") % 2 == 1)
-    path = str(tmp_path / "t_crash_mid")
-    merge_upsert(spark, path, b1, ["user_id"], "ts", tiebreak="event_id")
-    gen1 = _rows(spark.read.parquet(path))
-
-    with monkeypatch.context() as m:
-        # non-recovery call with an existing table: replace #1 parks
-        # path aside, replace #2 would bring staging live — crash there
-        _crash_nth(m, os, "replace", 2)
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="injected crash"):
-            merge_upsert(spark, path, b2, ["user_id"], "ts", tiebreak="event_id")
-
-    # crashed state: path absent for at most this window, but the FULL
-    # previous generation is parked — nothing is lost
-    assert not os.path.exists(path)
-    assert _rows(spark.read.parquet(path + ".__old__")) == gen1
-
-    merge_upsert(spark, path, b2, ["user_id"], "ts", tiebreak="event_id")
-    expect = latest_per_key(ev, ["user_id"], "ts", tiebreak="event_id")
-    assert _rows(spark.read.parquet(path)) == _rows(expect)
-    assert not os.path.exists(path + ".__old__")
-    assert not os.path.exists(path + ".__staging__")
-
-
-def test_merge_upsert_crash_after_swap_keeps_table_live(spark, sf_dir, tmp_path, monkeypatch):
-    """Crash AFTER `.__staging__ -> path` but before the parked copy is
-    deleted: the table at `path` is already the new generation (readers
-    never see anything stale), and the next merge clears the leftover
-    without resurrecting old rows."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import merge_upsert
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    parts = [ev.filter(F.pmod("event_id", F.lit(3)) == i) for i in range(3)]
-    path = str(tmp_path / "t_crash_post")
-    merge_upsert(spark, path, parts[0], ["user_id"], "ts", tiebreak="event_id")
-
-    with monkeypatch.context() as m:
-        # rmtree #1 clears any stale .__old__ pre-swap; #2 is the
-        # post-swap cleanup of the parked generation — crash there
-        _crash_nth(m, shutil, "rmtree", 2)
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="injected crash"):
-            merge_upsert(spark, path, parts[1], ["user_id"], "ts", tiebreak="event_id")
-
-    # the swap completed: readers already see the merged generation
-    two = latest_per_key(
-        parts[0].unionByName(parts[1]), ["user_id"], "ts", tiebreak="event_id"
-    )
-    assert _rows(spark.read.parquet(path)) == _rows(two)
-    assert os.path.exists(path + ".__old__")  # leftover, superseded
-
-    merge_upsert(spark, path, parts[2], ["user_id"], "ts", tiebreak="event_id")
-    expect = latest_per_key(ev, ["user_id"], "ts", tiebreak="event_id")
-    assert _rows(spark.read.parquet(path)) == _rows(expect)
-    assert not os.path.exists(path + ".__old__")
-    assert not os.path.exists(path + ".__staging__")
-
-
-def test_merge_upsert_crash_before_park_leaves_table_untouched(spark, sf_dir, tmp_path, monkeypatch):
-    """Crash on the park rename itself (`path -> .__old__` never
-    happens): the live table is untouched and a retry converges."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import merge_upsert
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
-
-    ev = load_table(spark, sf_dir, "events")
-    b1 = ev.filter(F.col("event_id") % 2 == 0)
-    b2 = ev.filter(F.col("event_id") % 2 == 1)
-    path = str(tmp_path / "t_crash_pre")
-    merge_upsert(spark, path, b1, ["user_id"], "ts", tiebreak="event_id")
-    gen1 = _rows(spark.read.parquet(path))
-
-    with monkeypatch.context() as m:
-        _crash_nth(m, os, "replace", 1)  # the park rename
-        import pytest as _pytest
-
-        with _pytest.raises(RuntimeError, match="injected crash"):
-            merge_upsert(spark, path, b2, ["user_id"], "ts", tiebreak="event_id")
-
-    assert _rows(spark.read.parquet(path)) == gen1  # untouched
-
-    merge_upsert(spark, path, b2, ["user_id"], "ts", tiebreak="event_id")
-    expect = latest_per_key(ev, ["user_id"], "ts", tiebreak="event_id")
-    assert _rows(spark.read.parquet(path)) == _rows(expect)
-    assert not os.path.exists(path + ".__old__")
 
 
 def test_tombstone_survives_late_old_update(spark, tmp_path):
     """Why deletes are stored as tombstones, not removed: after a key
     is deleted (ts=9), a LATE batch delivering an OLDER update (ts=3)
     must not resurrect it — the retained tombstone keeps winning the
-    last-write-wins reduce."""
+    last-write-wins reduce. The batches carry no ``_op`` column, so
+    the merge upserts the delete like any other row."""
     from pyspark.sql import functions as F
 
-    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import (
-        active_rows,
-        merge_upsert,
-    )
+    from kafka_cdc_elasticsearch_pipeline_spark.sources import lakelog
+    from kafka_cdc_elasticsearch_pipeline_spark.sources.lake import active_rows
 
     def batch(rows):
         return spark.createDataFrame(
             rows, "user_id bigint, ts timestamp_ntz, op string, v string"
         )
 
-    path = str(tmp_path / "t_tomb")
+    table = str(tmp_path / "t_tomb")
     import datetime
 
     t = lambda s: datetime.datetime.fromisoformat(s)  # noqa: E731
-    merge_upsert(
-        spark, path,
+    lakelog.merge_apply_cdc(
+        spark, table,
         batch([(1, t("2024-01-01T00:05"), "u", "a5"), (2, t("2024-01-01T00:01"), "u", "b1")]),
         ["user_id"], "ts",
     )
-    merge_upsert(
-        spark, path,
+    lakelog.merge_apply_cdc(
+        spark, table,
         batch([(1, t("2024-01-01T00:09"), "d", None)]),  # delete key 1
         ["user_id"], "ts",
     )
-    merge_upsert(
-        spark, path,
+    lakelog.merge_apply_cdc(
+        spark, table,
         batch([(1, t("2024-01-01T00:03"), "u", "a3")]),  # LATE older update
         ["user_id"], "ts",
     )
     active = active_rows(
-        spark.read.parquet(path), F.col("op") == "d"
+        lakelog.read(spark, table), F.col("op") == "d"
     ).collect()
     assert {r.user_id: r.v for r in active} == {2: "b1"}  # key 1 stays deleted
     # the tombstone itself is still in the table (retention)
-    full = spark.read.parquet(path).collect()
+    full = lakelog.read(spark, table).collect()
     assert {r.user_id for r in full} == {1, 2}

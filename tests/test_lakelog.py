@@ -215,12 +215,12 @@ def test_vacuum_keeps_recent_versions_readable(spark, tmp_path):
 
 
 def test_merge_retry_converges_after_race(spark, tmp_path, monkeypatch):
-    """merge_upsert_versioned losing a race re-reads the winner's
+    """merge_apply_cdc losing a race re-reads the winner's
     snapshot and retries; the final table includes BOTH writers'
     changes (last-write-wins is convergent)."""
     table = str(tmp_path / "t")
-    lakelog.merge_upsert_versioned(
-        spark, table, _rows(spark, [(1, 10, 100)]), ["user_id"], "ts", "event_id"
+    lakelog.merge_apply_cdc(
+        spark, table, _rows(spark, [(1, 10, 100)]), ["user_id"], "ts", tiebreak="event_id"
     )
     real_commit = lakelog.commit
     raced = {"done": False}
@@ -237,8 +237,8 @@ def test_merge_retry_converges_after_race(spark, tmp_path, monkeypatch):
         return real_commit(tbl, df, op, expect_parent=expect_parent, **kw)
 
     monkeypatch.setattr(lakelog, "commit", racing_commit)
-    lakelog.merge_upsert_versioned(
-        spark, table, _rows(spark, [(3, 30, 300)]), ["user_id"], "ts", "event_id"
+    lakelog.merge_apply_cdc(
+        spark, table, _rows(spark, [(3, 30, 300)]), ["user_id"], "ts", tiebreak="event_id"
     )
     monkeypatch.undo()
     final = lakelog.read(spark, table)
@@ -314,7 +314,7 @@ def test_txn_watermarks_survive_compaction_and_merge(spark, tmp_path):
     # compaction must not amnesia the sink's exactly-once state
     assert lakelog.read_manifest(t, lakelog.latest_version(t))["txns"] == {"app": 7}
     assert lakelog.txn_append_commit(spark, t, df, "app", 7) is None
-    lakelog.merge_upsert_versioned(spark, t, df, ["user_id"], "ts", "event_id")
+    lakelog.merge_apply_cdc(spark, t, df, ["user_id"], "ts", tiebreak="event_id")
     assert lakelog.read_manifest(t, lakelog.latest_version(t))["txns"] == {"app": 7}
 
 
@@ -409,7 +409,7 @@ def test_read_row_changes_after_vacuum_raises_resume_signal(spark, tmp_path):
     never a raw parquet path error (round-7 advice)."""
     table = str(tmp_path / "t")
     for i in range(1, 4):
-        lakelog.merge_upsert_cdf(
+        lakelog.merge_apply_cdc(
             spark, table, _rows(spark, [(i, 10 * i, 100 + i)]),
             ["user_id"], "ts", tiebreak="event_id",
         )
@@ -467,8 +467,8 @@ def test_compact_restages_over_concurrent_merge(spark, tmp_path):
     staged rewrite: the compactor must restage over the new head —
     the merged value, not the stale snapshot, is what survives."""
     table = str(tmp_path / "t")
-    lakelog.merge_upsert_versioned(
-        spark, table, _rows(spark, [(1, 10, 100)]), ["user_id"], "ts", "event_id"
+    lakelog.merge_apply_cdc(
+        spark, table, _rows(spark, [(1, 10, 100)]), ["user_id"], "ts", tiebreak="event_id"
     )
 
     default_claim = lakelog._link_claim
@@ -477,9 +477,9 @@ def test_compact_restages_over_concurrent_merge(spark, tmp_path):
     def racing_claim(tbl, version, tmp_manifest):
         if not fired["done"]:
             fired["done"] = True
-            lakelog.merge_upsert_versioned(
+            lakelog.merge_apply_cdc(
                 spark, tbl, _rows(spark, [(1, 99, 999)]),
-                ["user_id"], "ts", "event_id",
+                ["user_id"], "ts", tiebreak="event_id",
             )
         default_claim(tbl, version, tmp_manifest)
 

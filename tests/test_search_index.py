@@ -78,7 +78,7 @@ def test_bm25_maintain_handles_updates_and_deletes(spark, tmp_path):
     index = str(tmp_path / "idx")
     rows = [(1, "alpha beta beta", 1), (2, "beta gamma", 1), (3, "delta", 1)]
     base = spark.createDataFrame(rows, "doc_id bigint, text string, ts bigint")
-    lakelog.merge_upsert_cdf(spark, source, base, ["doc_id"], "ts")
+    lakelog.merge_apply_cdc(spark, source, base, ["doc_id"], "ts")
     si.bm25_index_maintain(spark, source, index)
 
     # update doc 1 (drops alpha => df(alpha) must go to 0 and vanish),
@@ -87,7 +87,7 @@ def test_bm25_maintain_handles_updates_and_deletes(spark, tmp_path):
         [(1, "beta epsilon", 2), (4, "gamma gamma", 2)],
         "doc_id bigint, text string, ts bigint",
     )
-    lakelog.merge_upsert_cdf(spark, source, upd, ["doc_id"], "ts")
+    lakelog.merge_apply_cdc(spark, source, upd, ["doc_id"], "ts")
     si.bm25_index_maintain(spark, source, index)
 
     tf, dl, df = si.bm25_read_index(spark, index)
@@ -125,13 +125,13 @@ def test_bm25_maintain_replays_after_crash_between_commits(spark, tmp_path):
     b1 = spark.createDataFrame(
         [(1, "alpha beta", 1)], "doc_id bigint, text string, ts bigint"
     )
-    lakelog.merge_upsert_cdf(spark, source, b1, ["doc_id"], "ts")
+    lakelog.merge_apply_cdc(spark, source, b1, ["doc_id"], "ts")
     si.bm25_index_maintain(spark, source, index)
 
     b2 = spark.createDataFrame(
         [(2, "beta gamma", 1)], "doc_id bigint, text string, ts bigint"
     )
-    lakelog.merge_upsert_cdf(spark, source, b2, ["doc_id"], "ts")
+    lakelog.merge_apply_cdc(spark, source, b2, ["doc_id"], "ts")
 
     real_append = si._append_segment
     state = {"n": 0}
@@ -279,12 +279,12 @@ def test_bm25_maintain_backfill_falls_back_to_full_probe(
     index = str(tmp_path / "idx")
     rows = [(1, "alpha beta", 1), (2, "beta gamma", 1)]
     base = spark.createDataFrame(rows, "doc_id bigint, text string, ts bigint")
-    lakelog.merge_upsert_cdf(spark, source, base, ["doc_id"], "ts")
+    lakelog.merge_apply_cdc(spark, source, base, ["doc_id"], "ts")
     si.bm25_index_maintain(spark, source, index)
     upd = spark.createDataFrame(
         [(1, "beta epsilon zeta", 2)], "doc_id bigint, text string, ts bigint"
     )
-    lakelog.merge_upsert_cdf(spark, source, upd, ["doc_id"], "ts")
+    lakelog.merge_apply_cdc(spark, source, upd, ["doc_id"], "ts")
     si.bm25_index_maintain(spark, source, index)
 
     snapshot = lakelog.read(spark, source).select("doc_id", "text")

@@ -4,7 +4,7 @@ instead of asserting them.
 For a table already holding X rows (X grows 16×), time:
 - ``append_commit`` of a FIXED-size batch  -> must stay FLAT (the
   commit writes the batch + one manifest link, never the table);
-- ``merge_upsert_versioned`` of the same batch -> O(X) bytes written
+- ``merge_apply_cdc`` of the same batch -> O(X) bytes written
   (the COW merge rewrites the snapshot — the documented trade);
 - ``metadata_stats``                       -> driver-side JSON, ~0;
 - pruned read of one batch (``where`` on the batch key range) vs the
@@ -116,7 +116,7 @@ def main() -> int:
             for i in range(n_batches):
                 lakelog.append_commit(spark, tm, batch(i))
             t_merge = best_of(
-                lambda: lakelog.merge_upsert_versioned(
+                lambda: lakelog.merge_apply_cdc(
                     spark, tm, batch(0), ["k"], "v"
                 )
             )
