@@ -2,12 +2,14 @@
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...,
+     "cpus": N}
 
 ``value`` is the total wall-clock of the headline set (lower is
-better). Each query is forced with a count-style action (collect on
-small results) so the full plan executes but driver transfer stays
-out of the measurement as much as possible.
+better); ``cpus`` is the session's default parallelism. Each query is
+forced with a count-style action (collect on small results) so the
+full plan executes but driver transfer stays out of the measurement
+as much as possible.
 
 Usage:  python bench.py [--all] [names...]
         --all  benches every registered query, not just bench=True
@@ -132,6 +134,7 @@ def main() -> int:
                 "unit": "sec",
                 "queries": per_query,
                 "sf": float(sf) if sf.replace(".", "", 1).isdigit() else sf,
+                "cpus": cores,
             }
         )
     )

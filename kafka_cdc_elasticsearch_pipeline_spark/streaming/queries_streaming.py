@@ -29,6 +29,38 @@ _SEQ = itertools.count()
 
 EVENT_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 
+#: Batch latest-per-key TABLE over ``events`` — the oracle of every row
+#: that materializes last-write-per-key by (ts, event_id).
+LATEST_PER_KEY_ORACLE = f"""
+    SELECT {', '.join(EVENT_COLS)}
+    FROM (
+      SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+      FROM events
+    )
+    WHERE rn = 1
+    """
+
+#: Batch per-user profile — the oracle of every row built on
+#: ``stateful.user_profile_stream``.
+PROFILE_ORACLE = """
+    WITH agg AS (
+      SELECT user_id, count(*) AS n_events,
+             sum(CAST(floor(value) AS BIGINT))::BIGINT AS total_units
+      FROM events GROUP BY user_id
+    ),
+    last AS (
+      SELECT user_id,
+             strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts,
+             round(value, 2)::DECIMAL(18,2)::VARCHAR AS last_value
+      FROM (
+        SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+        FROM events
+      ) WHERE rn = 1
+    )
+    SELECT a.user_id, a.n_events, a.total_units, l.last_ts, l.last_value
+    FROM agg a JOIN last l ON a.user_id = l.user_id
+    """
+
 
 def _run(df: DataFrame, spark: SparkSession, base: str) -> DataFrame:
     name = f"{base}_{next(_SEQ)}"
@@ -75,14 +107,7 @@ def t1_t3_streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFra
 
 @query(
     "t5_streaming_table_latest_per_key",
-    f"""
-    SELECT {', '.join(EVENT_COLS)}
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    )
-    WHERE rn = 1
-    """,
+    LATEST_PER_KEY_ORACLE,
     tags=("T5", "S2", "streaming"),
 )
 def t5_streaming_table_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -100,15 +125,13 @@ def t5_streaming_table_latest_per_key(spark: SparkSession, sf_dir: str) -> DataF
 
 
 @query(
+    "t5_latest_per_key_ttl_tws_v2",
+    LATEST_PER_KEY_ORACLE,
+    tags=("T5", "streaming", "bounded-state", "ttl", "applyInPandasWithState"),
+)
+@query(
     "t5_latest_per_key_ttl_eviction",
-    f"""
-    SELECT {', '.join(EVENT_COLS)}
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    )
-    WHERE rn = 1
-    """,
+    LATEST_PER_KEY_ORACLE,
     tags=("T5", "S2", "streaming", "bounded-state", "ttl"),
 )
 def t5_latest_per_key_ttl_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,7 +147,10 @@ def t5_latest_per_key_ttl_eviction(spark: SparkSession, sf_dir: str) -> DataFram
     variant holds one state row per key ever seen (state-store death
     at 100 TB of user ids); this is the form that survives.
     State-size bound is pinned in tests/test_streaming.py
-    (numRowsTotal over user-day keys)."""
+    (numRowsTotal over user-day keys).
+
+    Also registered as `t5_latest_per_key_ttl_tws_v2`, the name of its
+    former twin on Spark 4's v2 stateful API."""
     from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful import (
         finalize_latest,
         latest_per_key_ttl_stream,
@@ -141,25 +167,13 @@ def t5_latest_per_key_ttl_eviction(spark: SparkSession, sf_dir: str) -> DataFram
 
 
 @query(
+    "stateful_user_profile_tws_v2",
+    PROFILE_ORACLE,
+    tags=("streaming", "stateful", "applyInPandasWithState"),
+)
+@query(
     "stateful_user_profile_apply_in_pandas",
-    """
-    WITH agg AS (
-      SELECT user_id, count(*) AS n_events,
-             sum(CAST(floor(value) AS BIGINT))::BIGINT AS total_units
-      FROM events GROUP BY user_id
-    ),
-    last AS (
-      SELECT user_id,
-             strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts,
-             round(value, 2)::DECIMAL(18,2)::VARCHAR AS last_value
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-      ) WHERE rn = 1
-    )
-    SELECT a.user_id, a.n_events, a.total_units, l.last_ts, l.last_value
-    FROM agg a JOIN last l ON a.user_id = l.user_id
-    """,
+    PROFILE_ORACLE,
     tags=("streaming", "stateful", "applyInPandasWithState"),
 )
 def stateful_user_profile_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,7 +181,10 @@ def stateful_user_profile_apply_in_pandas(spark: SparkSession, sf_dir: str) -> D
     profile state maintained across ~8 replayed micro-batches, update
     log reduced to final state — which must hash-match the batch
     oracle. The pattern for semantics beyond built-in aggregations
-    (profiles, CDC merge rules, custom eviction)."""
+    (profiles, CDC merge rules, custom eviction).
+
+    Also registered as `stateful_user_profile_tws_v2`, the name of its
+    former twin on Spark 4's v2 stateful API."""
     from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful import (
         finalize_profiles,
         user_profile_stream,
@@ -184,94 +201,26 @@ def stateful_user_profile_apply_in_pandas(spark: SparkSession, sf_dir: str) -> D
 
 
 @query(
-    "stateful_user_profile_tws_v2",
-    """
-    WITH agg AS (
-      SELECT user_id, count(*) AS n_events,
-             sum(CAST(floor(value) AS BIGINT))::BIGINT AS total_units
-      FROM events GROUP BY user_id
-    ),
-    last AS (
-      SELECT user_id,
-             strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts,
-             round(value, 2)::DECIMAL(18,2)::VARCHAR AS last_value
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-      ) WHERE rn = 1
-    )
-    SELECT a.user_id, a.n_events, a.total_units, l.last_ts, l.last_value
-    FROM agg a JOIN last l ON a.user_id = l.user_id
-    """,
-    tags=("streaming", "stateful", "transformWithStateInPandas", "spark4"),
-)
-def stateful_user_profile_tws_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME per-user profile operator on Spark 4's NEW stateful API
-    (``transformWithStateInPandas``, typed ValueState handles, RocksDB
-    state store) against the SAME batch oracle as
-    `stateful_user_profile_apply_in_pandas` — the executed proof that
-    migrating a pipeline between the two stateful APIs does not change
-    a single output hash. Raises (never silently falls back to the old
-    API) when the python protobuf runtime the v2 state protocol needs
-    is absent; see compat/protobuf_shim.py for how this sandbox gets
-    one."""
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful import (
-        finalize_profiles,
-    )
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful_v2 import (
-        require_protobuf,
-        rocksdb_state_store,
-        user_profile_stream_v2,
-    )
-
-    require_protobuf()
-    stream, tmp = replay_stream(spark, sf_dir, "events", chunks=8)
-    try:
-        with rocksdb_state_store(spark):
-            updates = user_profile_stream_v2(stream)
-            name = f"strm_profile_v2_{next(_SEQ)}"
-            run_to_memory(updates, name, output_mode="update")
-        return finalize_profiles(spark.table(name))
-    finally:
-        cleanup(tmp)
-
-
-@query(
     "stateful_event_type_counts_tws_v2",
     """
     SELECT user_id, event_type, count(*)::BIGINT AS n_events
     FROM events GROUP BY user_id, event_type
     """,
-    tags=("streaming", "stateful", "transformWithStateInPandas", "spark4", "mapstate"),
+    tags=("streaming", "stateful", "groupBy"),
 )
 def stateful_event_type_counts_tws_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v2 MAP state: per-user running counts keyed by event type held
-    in a typed MapState (one map entry per event type), emitted as
-    update rows across ~8 replayed micro-batches and reduced by max()
-    per (user, event_type) — counts are monotone, so the final table
-    must equal the batch GROUP BY. Pins the v2 MapState protocol
-    (containsKey/getValue/updateValue round-trips through the state
-    server) the way the profile row pins ValueState and the TTL row
-    pins timers — the three state primitives a migrating pipeline
-    actually uses, each with an executed oracle row."""
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful_v2 import (
-        event_type_counts_stream_v2,
-        require_protobuf,
-        rocksdb_state_store,
-    )
-
-    require_protobuf()
+    """Per-(user, event type) running counts across ~8 replayed
+    micro-batches — the state shape ksqlDB gives a `GROUP BY user_id,
+    event_type` table. Needs no custom state: the built-in streaming
+    aggregation keeps one count per key pair, and the final table must
+    equal the batch GROUP BY. (The name is kept from the row's former
+    v2-stateful-API MapState implementation.)"""
     stream, tmp = replay_stream(spark, sf_dir, "events", chunks=8)
     try:
-        with rocksdb_state_store(spark):
-            updates = event_type_counts_stream_v2(stream)
-            name = f"strm_etype_v2_{next(_SEQ)}"
-            run_to_memory(updates, name, output_mode="update")
-        return (
-            spark.table(name)
-            .groupBy("user_id", "event_type")
-            .agg(F.max("n_events").cast("bigint").alias("n_events"))
+        counts = stream.groupBy("user_id", "event_type").agg(
+            F.count(F.lit(1)).alias("n_events")
         )
+        return _run(counts, spark, "strm_etype")
     finally:
         cleanup(tmp)
 
@@ -285,33 +234,26 @@ def stateful_event_type_counts_tws_v2(spark: SparkSession, sf_dir: str) -> DataF
            ) AS recent_event_ids
     FROM events GROUP BY user_id
     """,
-    tags=("streaming", "stateful", "transformWithStateInPandas", "spark4", "liststate"),
+    tags=("streaming", "stateful", "applyInPandasWithState"),
 )
 def stateful_recent_events_tws_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """v2 LIST state — the last v2 state primitive without a gate row
-    (ValueState: profile; MapState: event-type counts; timers: TTL;
-    recovery + schema evolution: their own rows). Per-user top-3
-    recent event ids by (ts, event_id), the list held in a typed
-    ListState whose append/iterate/replace protocol each batch
-    round-trips (appendList the batch, get the grown list, put the
-    trimmed top-k). Update-log compaction is max_by on the flattened
-    ranked (ts, eid) key — lexicographically monotone as events
-    arrive — and the final table must equal the batch top-3, so a
-    dropped append, a stale get, or a put that failed to replace all
-    flip the hash."""
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful_v2 import (
-        recent_events_stream_v2,
-        require_protobuf,
-        rocksdb_state_store,
+    """Per-user top-3 recent event ids by (ts, event_id), folded by
+    ``stateful.recent_events_stream`` (applyInPandasWithState, state =
+    the flattened ranked (ts, eid) pairs). Update-log compaction is
+    max_by on that flattened key — lexicographically monotone as
+    events arrive — and the final table must equal the batch top-3, so
+    a dropped event or a stale state read flips the hash. (The name is
+    kept from the row's former v2-stateful-API ListState
+    implementation.)"""
+    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful import (
+        recent_events_stream,
     )
 
-    require_protobuf()
     stream, tmp = replay_stream(spark, sf_dir, "events", chunks=8)
     try:
-        with rocksdb_state_store(spark):
-            updates = recent_events_stream_v2(stream)
-            name = f"strm_recent_v2_{next(_SEQ)}"
-            run_to_memory(updates, name, output_mode="update")
+        updates = recent_events_stream(stream)
+        name = f"strm_recent_{next(_SEQ)}"
+        run_to_memory(updates, name, output_mode="update")
         return (
             spark.table(name)
             .groupBy("user_id")
@@ -327,47 +269,6 @@ def stateful_recent_events_tws_v2(spark: SparkSession, sf_dir: str) -> DataFrame
                 ).alias("recent_event_ids")
             )
         )
-    finally:
-        cleanup(tmp)
-
-
-@query(
-    "t5_latest_per_key_ttl_tws_v2",
-    f"""
-    SELECT {', '.join(EVENT_COLS)}
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    )
-    WHERE rn = 1
-    """,
-    tags=("T5", "streaming", "bounded-state", "ttl", "transformWithStateInPandas", "spark4"),
-)
-def t5_latest_per_key_ttl_tws_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TTL-bounded latest-per-key on the NEW stateful API: the eviction
-    contract of `t5_latest_per_key_ttl_eviction` re-expressed with v2
-    TIMER primitives (registerTimer / handleExpiredTimer, EventTime
-    mode) instead of GroupStateTimeout — one live timer per key,
-    replaced on update, state cleared when it fires. Same oracle as the
-    old-API row: eviction plus re-entry must still converge to the
-    batch latest-per-key table."""
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful import (
-        finalize_latest,
-    )
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful_v2 import (
-        latest_per_key_ttl_stream_v2,
-        require_protobuf,
-        rocksdb_state_store,
-    )
-
-    require_protobuf()
-    stream, tmp = replay_stream(spark, sf_dir, "events", chunks=8)
-    try:
-        with rocksdb_state_store(spark):
-            updates = latest_per_key_ttl_stream_v2(stream, ttl="2 hours")
-            name = f"strm_latest_ttl_v2_{next(_SEQ)}"
-            run_to_memory(updates, name, output_mode="update")
-        return finalize_latest(spark.table(name)).select(*EVENT_COLS)
     finally:
         cleanup(tmp)
 
@@ -740,14 +641,7 @@ def t7_streaming_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t5_backfill_plus_tail_merge",
-    f"""
-    SELECT {', '.join(EVENT_COLS)}
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    )
-    WHERE rn = 1
-    """,
+    LATEST_PER_KEY_ORACLE,
     tags=("T5", "R2", "streaming", "backfill"),
 )
 def t5_backfill_plus_tail_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -832,14 +726,7 @@ def t_checkpoint_recovery_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "t_checkpoint_recovery_latest_per_key",
-    f"""
-    SELECT {', '.join(EVENT_COLS)}
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    )
-    WHERE rn = 1
-    """,
+    LATEST_PER_KEY_ORACLE,
     tags=("T5", "R2", "streaming", "recovery"),
 )
 def t_checkpoint_recovery_latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -871,25 +758,18 @@ def t_checkpoint_recovery_latest_per_key(spark: SparkSession, sf_dir: str) -> Da
 
 
 @query(
+    "t_state_schema_evolution_tws_v2",
+    PROFILE_ORACLE,
+    tags=("streaming", "stateful", "applyInPandasWithState", "R2", "recovery"),
+)
+@query(
+    "t_checkpoint_recovery_tws_v2",
+    PROFILE_ORACLE,
+    tags=("streaming", "stateful", "applyInPandasWithState", "R2", "recovery"),
+)
+@query(
     "t_checkpoint_recovery_stateful_profile",
-    """
-    WITH agg AS (
-      SELECT user_id, count(*) AS n_events,
-             sum(CAST(floor(value) AS BIGINT))::BIGINT AS total_units
-      FROM events GROUP BY user_id
-    ),
-    last AS (
-      SELECT user_id,
-             strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts,
-             round(value, 2)::DECIMAL(18,2)::VARCHAR AS last_value
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-      ) WHERE rn = 1
-    )
-    SELECT a.user_id, a.n_events, a.total_units, l.last_ts, l.last_value
-    FROM agg a JOIN last l ON a.user_id = l.user_id
-    """,
+    PROFILE_ORACLE,
     tags=("streaming", "stateful", "applyInPandasWithState", "R2", "recovery"),
 )
 def t_checkpoint_recovery_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -901,153 +781,25 @@ def t_checkpoint_recovery_stateful_profile(spark: SparkSession, sf_dir: str) -> 
     aggregations — this row proves the escape-hatch operator keeps the
     reference's restart-and-resume guarantee too. ``n_events`` /
     ``total_units`` are running accumulations, so EVERY key updated
-    after the restart under-counts if state was lost."""
+    after the restart under-counts if state was lost.
+
+    Also registered as `t_checkpoint_recovery_tws_v2` and
+    `t_state_schema_evolution_tws_v2`, the names of two former rows on
+    Spark 4's v2 stateful API. The second one restarted with a WIDENED
+    state schema under Avro state encoding. State-schema evolution
+    existed only on the v2 API and was removed with it: under this name
+    the restart resumes the same state schema, so the row checks plain
+    kill/restart recovery."""
     from kafka_cdc_elasticsearch_pipeline_spark.streaming.recovery import kill_and_resume
     from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful import (
+        project_profile,
         user_profile_stream,
     )
 
     compacted = kill_and_resume(
         spark, sf_dir, "events", user_profile_stream, ["user_id"], chunks=8, kill_after=3
     )
-    return compacted.select(
-        "user_id",
-        "n_events",
-        "total_units",
-        F.date_format(
-            F.timestamp_micros(F.col("last_ts_us")).cast("timestamp_ntz"),
-            "yyyy-MM-dd HH:mm:ss.SSSSSS",
-        ).alias("last_ts"),
-        F.round("last_value", 2).cast("decimal(18,2)").cast("string").alias("last_value"),
-    )
-
-
-@query(
-    "t_checkpoint_recovery_tws_v2",
-    """
-    WITH agg AS (
-      SELECT user_id, count(*) AS n_events,
-             sum(CAST(floor(value) AS BIGINT))::BIGINT AS total_units
-      FROM events GROUP BY user_id
-    ),
-    last AS (
-      SELECT user_id,
-             strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts,
-             round(value, 2)::DECIMAL(18,2)::VARCHAR AS last_value
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-      ) WHERE rn = 1
-    )
-    SELECT a.user_id, a.n_events, a.total_units, l.last_ts, l.last_value
-    FROM agg a JOIN last l ON a.user_id = l.user_id
-    """,
-    tags=("streaming", "stateful", "transformWithStateInPandas", "spark4", "R2", "recovery"),
-)
-def t_checkpoint_recovery_tws_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kill/restart on the NEW stateful API: the v2 profile processor
-    dies after 3 of 8 replay micro-batches and restarts from the same
-    checkpoint — typed ValueState rows live in RocksDB column families
-    under the checkpoint, and the restarted query must resume the
-    running accumulations exactly (every key updated post-restart
-    under-counts if v2 state was lost). Same oracle as the old-API
-    recovery row: the migration keeps the restart-and-resume
-    guarantee, not just the steady-state fold."""
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.recovery import (
-        kill_and_resume,
-    )
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful_v2 import (
-        require_protobuf,
-        rocksdb_state_store,
-        user_profile_stream_v2,
-    )
-
-    require_protobuf()
-    with rocksdb_state_store(spark):
-        compacted = kill_and_resume(
-            spark, sf_dir, "events", user_profile_stream_v2, ["user_id"],
-            chunks=8, kill_after=3,
-        )
-    return compacted.select(
-        "user_id",
-        "n_events",
-        "total_units",
-        F.date_format(
-            F.timestamp_micros(F.col("last_ts_us")).cast("timestamp_ntz"),
-            "yyyy-MM-dd HH:mm:ss.SSSSSS",
-        ).alias("last_ts"),
-        F.round("last_value", 2).cast("decimal(18,2)").cast("string").alias("last_value"),
-    )
-
-
-@query(
-    "t_state_schema_evolution_tws_v2",
-    """
-    WITH agg AS (
-      SELECT user_id, count(*) AS n_events,
-             sum(CAST(floor(value) AS BIGINT))::BIGINT AS total_units
-      FROM events GROUP BY user_id
-    ),
-    last AS (
-      SELECT user_id,
-             strftime(ts, '%Y-%m-%d %H:%M:%S.%f') AS last_ts,
-             round(value, 2)::DECIMAL(18,2)::VARCHAR AS last_value
-      FROM (
-        SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        FROM events
-      ) WHERE rn = 1
-    )
-    SELECT a.user_id, a.n_events, a.total_units, l.last_ts, l.last_value
-    FROM agg a JOIN last l ON a.user_id = l.user_id
-    """,
-    tags=(
-        "streaming", "stateful", "transformWithStateInPandas", "spark4",
-        "schema-evolution", "recovery",
-    ),
-)
-def t_state_schema_evolution_tws_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STATE SCHEMA EVOLUTION on the v2 API — the stated reason
-    transformWithStateInPandas exists beyond typed state and timers
-    (round-7 verdict #6). Run 1 writes the 5-field profile ValueState
-    for 3 of 8 replay micro-batches under Avro state encoding; run 2
-    restarts from the SAME checkpoint with the state widened by a
-    trailing ``units_plus_n`` column. Avro schema resolution must
-    decode every pre-evolution row with the added field null; the
-    evolved processor backfills it from the surviving fields and
-    checks ``units_plus_n == n_events + total_units`` on every
-    subsequent read — a wrong default or field misalignment poisons
-    ``n_events`` and fails the hash, while a decode refusal kills the
-    restarted query outright. Same batch oracle as the recovery rows:
-    an evolved restart must also still resume the accumulations
-    exactly."""
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.recovery import (
-        kill_and_resume,
-    )
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful_v2 import (
-        avro_state_encoding,
-        require_protobuf,
-        rocksdb_state_store,
-        user_profile_stream_v2,
-        user_profile_stream_v2_evolved,
-    )
-
-    require_protobuf()
-    with rocksdb_state_store(spark), avro_state_encoding(spark):
-        compacted = kill_and_resume(
-            spark, sf_dir, "events", user_profile_stream_v2, ["user_id"],
-            chunks=8, kill_after=3,
-            agg_builder2=user_profile_stream_v2_evolved,
-        )
-    return compacted.select(
-        "user_id",
-        "n_events",
-        "total_units",
-        F.date_format(
-            F.timestamp_micros(F.col("last_ts_us")).cast("timestamp_ntz"),
-            "yyyy-MM-dd HH:mm:ss.SSSSSS",
-        ).alias("last_ts"),
-        F.round("last_value", 2).cast("decimal(18,2)").cast("string").alias("last_value"),
-    )
+    return project_profile(compacted)
 
 
 @query(
@@ -1125,14 +877,7 @@ def t6_watermark_late_eviction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lake_streaming_cdc_merge",
-    f"""
-    SELECT {', '.join(EVENT_COLS)}
-    FROM (
-      SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      FROM events
-    )
-    WHERE rn = 1
-    """,
+    LATEST_PER_KEY_ORACLE,
     tags=("T5", "S2", "R2", "lake", "streaming", "recovery"),
 )
 def lake_streaming_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -211,17 +211,14 @@ def kill_and_resume(
     chunks: int = 8,
     kill_after: int = 3,
     order_col: str | None = "ts",
-    agg_builder2: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """The full recovery exercise: run over the first ``kill_after``
     chunks, die, restart from the same checkpoint over all ``chunks``,
     compact the update log, return the final table (caller hash-checks
     it against the batch oracle).
 
-    ``agg_builder2`` (default: ``agg_builder``) builds the RESTARTED
-    query — pass an upgraded operator to model a code/schema migration
-    across the restart (e.g. transformWithState state schema
-    evolution), where run 2 must read run 1's checkpointed state."""
+    Both runs build the query with ``agg_builder``: the restart resumes
+    the state schema run 1 checkpointed."""
     tmp, parts, schema = stage_replay_files(spark, sf_dir, table, chunks, order_col)
     try:
         ckpt = os.path.join(tmp, "ckpt")
@@ -234,8 +231,7 @@ def kill_and_resume(
         # keeps growing). Restart from the same checkpoint: must skip
         # the committed head files and resume from recovered state.
         reveal(tmp, parts[kill_after:])
-        builder2 = agg_builder2 or agg_builder
-        run_until_caught_up(builder2(open_stream(spark, tmp, schema)), ckpt, log_dir)
+        run_until_caught_up(agg_builder(open_stream(spark, tmp, schema)), ckpt, log_dir)
         final = last_update_per_key(spark.read.parquet(log_dir), keys)
         # Materialize before the temp log dir is deleted.
         out = final.localCheckpoint(eager=True)

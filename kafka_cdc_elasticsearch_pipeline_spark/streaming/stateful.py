@@ -21,6 +21,7 @@ Scale notes
 
 from __future__ import annotations
 
+import heapq
 from collections.abc import Iterator
 from typing import Any
 
@@ -96,6 +97,11 @@ LATEST_TTL_STATE_SCHEMA = (
 )
 
 
+def _str_or_none(v: Any) -> str | None:
+    """A pandas string cell as str, keeping NULL as NULL."""
+    return None if pd.isna(v) else str(v)
+
+
 def _make_latest_ttl_tracker(ttl_ms: int):
     def tracker(
         key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -116,7 +122,9 @@ def _make_latest_ttl_tracker(ttl_ms: int):
             if (int(row["ts_us"]), int(row["event_id"])) > (ts_us, eid):
                 ts_us, eid = int(row["ts_us"]), int(row["event_id"])
                 etype, val, props = (
-                    str(row["event_type"]), float(row["value"]), str(row["props"])
+                    _str_or_none(row["event_type"]),
+                    float(row["value"]),
+                    _str_or_none(row["props"]),
                 )
         state.update((ts_us, eid, etype, val, props))
         # Evict when the watermark passes last-event-time + TTL. The
@@ -171,6 +179,55 @@ def latest_per_key_ttl_stream(
         stateStructType=LATEST_TTL_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+
+
+RECENT_OUTPUT_SCHEMA = (
+    "user_id bigint, recent_event_ids array<bigint>,"
+    " recent_sort_key array<bigint>"
+)
+RECENT_STATE_SCHEMA = "recent array<bigint>"
+RECENT_K = 3
+
+
+def _recent_events_tracker(
+    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    flat = [int(x) for x in state.get[0]] if state.exists else []
+    pairs = list(zip(flat[::2], flat[1::2]))
+    for pdf in pdfs:
+        pairs.extend(zip(pdf["ts_us"].tolist(), pdf["event_id"].tolist()))
+    top = heapq.nlargest(RECENT_K, pairs)
+    # The flattened ranked (ts, eid) pairs are both the state and the
+    # sort key: lexicographically NON-DECREASING as events arrive (the
+    # ranked prefix only improves), so update-log compaction is max_by
+    # on it.
+    recent = [x for pair in top for x in pair]
+    state.update((recent,))
+    yield pd.DataFrame(
+        {
+            "user_id": [key[0]],
+            "recent_event_ids": [[e for _, e in top]],
+            "recent_sort_key": [recent],
+        }
+    )
+
+
+def recent_events_stream(events: DataFrame) -> DataFrame:
+    """Per-user top-``RECENT_K`` most recent event ids by (ts, event_id),
+    emitted in update mode; reduce with ``max_by(recent_event_ids,
+    recent_sort_key)``."""
+    prepared = events.select(
+        "user_id",
+        "event_id",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+    )
+    return prepared.groupBy("user_id").applyInPandasWithState(
+        _recent_events_tracker,
+        outputStructType=RECENT_OUTPUT_SCHEMA,
+        stateStructType=RECENT_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -312,7 +369,13 @@ def finalize_profiles(updates: DataFrame) -> DataFrame:
     from kafka_cdc_elasticsearch_pipeline_spark.operators.table import latest_per_key
 
     final = latest_per_key(updates, ["user_id"], "n_events", method="max_by")
-    return final.select(
+    return project_profile(final)
+
+
+def project_profile(profiles: DataFrame) -> DataFrame:
+    """Final profile rows in the gate's output schema: ``last_ts`` and
+    ``last_value`` as canonical strings (see :func:`finalize_profiles`)."""
+    return profiles.select(
         "user_id",
         "n_events",
         "total_units",

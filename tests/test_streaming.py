@@ -346,99 +346,6 @@ def test_stream_stream_interval_join_across_batches(spark, tmp_path):
     assert got[0].lag_us == 20 * 60 * 1_000_000
 
 
-def test_transform_with_state_matches_old_api(spark, sf_dir):
-    """Spark 4's transformWithStateInPandas twin of the profile
-    operator must produce byte-identical final profiles to the
-    applyInPandasWithState version. SKIPs only where neither a real
-    python protobuf nor the vendorable pure-python copy exists (see
-    compat/protobuf_shim.py — in this sandbox the shim provides one,
-    so this test RUNS)."""
-    import pytest
-
-    from kafka_cdc_elasticsearch_pipeline_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no python protobuf and no vendorable copy on this host")
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.replay import (
-        cleanup,
-        replay_stream,
-        run_to_memory,
-    )
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful import (
-        finalize_profiles,
-        user_profile_stream,
-    )
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful_v2 import (
-        rocksdb_state_store,
-        user_profile_stream_v2,
-    )
-
-    outs = []
-    for fn, label in ((user_profile_stream, "v1"), (user_profile_stream_v2, "v2")):
-        stream, tmp = replay_stream(spark, sf_dir, "events", chunks=4)
-        try:
-            with rocksdb_state_store(spark):
-                run_to_memory(fn(stream), f"twsp_{label}", output_mode="update")
-            outs.append(
-                finalize_profiles(spark.table(f"twsp_{label}"))
-                .orderBy("user_id")
-                .collect()
-            )
-        finally:
-            cleanup(tmp)
-    assert len(outs[0]) > 0
-    assert outs[0] == outs[1]
-
-
-def test_latest_per_key_ttl_v1_v2_equivalence(spark, sf_dir):
-    """API-independence of the TTL latest-per-key contract: the
-    applyInPandasWithState (GroupStateTimeout) and
-    transformWithStateInPandas (registerTimer/handleExpiredTimer)
-    implementations must converge to the identical final table on the
-    same replay — migrating the eviction pattern to the new stateful
-    API may not change a single row."""
-    import pytest
-
-    from kafka_cdc_elasticsearch_pipeline_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no python protobuf and no vendorable copy on this host")
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.replay import (
-        cleanup,
-        replay_stream,
-        run_to_memory,
-    )
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful import (
-        finalize_latest,
-        latest_per_key_ttl_stream,
-    )
-    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful_v2 import (
-        latest_per_key_ttl_stream_v2,
-        rocksdb_state_store,
-    )
-
-    outs = []
-    for fn, label in (
-        (latest_per_key_ttl_stream, "v1"),
-        (latest_per_key_ttl_stream_v2, "v2"),
-    ):
-        stream, tmp = replay_stream(spark, sf_dir, "events", chunks=4)
-        try:
-            with rocksdb_state_store(spark):
-                run_to_memory(
-                    fn(stream, ttl="2 hours"), f"ttl_{label}", output_mode="update"
-                )
-            outs.append(
-                finalize_latest(spark.table(f"ttl_{label}"))
-                .orderBy("user_id")
-                .collect()
-            )
-        finally:
-            cleanup(tmp)
-    assert len(outs[0]) > 0
-    assert outs[0] == outs[1]
-
-
 def test_image_dedup_index_ttl_bounds_state_and_reenters(spark, sf_dir):
     """The BOUNDED streaming image dedup index: with event time =
     (doc_id+1) hours and a 30-minute TTL, every fingerprint idles past
@@ -654,6 +561,36 @@ def test_latest_per_key_ttl_bounds_state(spark, sf_dir):
         cleanup(tmp)
 
 
+def test_latest_per_key_ttl_keeps_null_strings(spark, tmp_path):
+    """A NULL event_type / props on the winning event stays NULL through
+    the TTL fold's state and output — it must not become the string
+    'None' — so the streamed table equals batch latest-per-key."""
+    from kafka_cdc_elasticsearch_pipeline_spark.streaming.stateful import (
+        finalize_latest,
+        latest_per_key_ttl_stream,
+    )
+
+    events = spark.createDataFrame(
+        [(6, "2024-01-01 10:00:00", 1, "view", 0.5, "{}"),
+         (7, "2024-01-01 10:30:00", 1, None, 1.5, None)],
+        "event_id long, ts string, user_id long, event_type string,"
+        " value double, props string",
+    ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+    data_dir = str(tmp_path / "events")
+    events.coalesce(1).write.parquet(data_dir)
+    stream = spark.readStream.schema(events.schema).parquet(data_dir)
+    run_to_memory(
+        latest_per_key_ttl_stream(stream, ttl="2 hours"),
+        "latest_ttl_nulls",
+        output_mode="update",
+    )
+    cols = events.columns
+    got = finalize_latest(spark.table("latest_ttl_nulls")).select(*cols).collect()
+    want = latest_per_key(events, ["user_id"], "ts", "event_id").select(*cols).collect()
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    assert got[0].event_type is None and got[0].props is None
+
+
 def test_dedup_within_watermark_bounds_state(spark, sf_dir):
     """The bounded-state dedup claim, observed in the state store: a
     doubled replay deduped with dropDuplicatesWithinWatermark must (a)
@@ -701,48 +638,11 @@ def test_dedup_within_watermark_bounds_state(spark, sf_dir):
         cleanup(tmp)
 
 
-def test_protobuf_shim_shared_identity_across_import_styles():
-    """`import google.protobuf.X` (dotted) and `from google.protobuf
-    import X` must yield the SAME module object — the alias finder
-    sits ahead of PathFinder, so the dotted form can't re-execute the
-    vendored file under the google.* name (duplicate descriptor-pool
-    registration; round-7 advice). Skips where a REAL protobuf is
-    installed (then the shim never engages and identity is trivial)."""
-    import importlib
-    import sys
-
-    import pytest
-
-    from kafka_cdc_elasticsearch_pipeline_spark.compat import protobuf_shim
-
-    if not protobuf_shim.ensure_protobuf():
-        pytest.skip("no python protobuf and no vendorable copy on this host")
-    if not protobuf_shim._installed:
-        pytest.skip("real protobuf install: shim not engaged")
-    _VENDOR_PKG = protobuf_shim._VENDOR_PKG
-    dotted = importlib.import_module("google.protobuf.duration_pb2")
-    from google.protobuf import duration_pb2 as from_style
-
-    vendored = importlib.import_module(_VENDOR_PKG + ".duration_pb2")
-    assert dotted is from_style is vendored
-    # and the package itself is one object under both names
-    assert sys.modules["google.protobuf"] is sys.modules[_VENDOR_PKG]
-
-
 def test_state_schema_evolution_v2_resumes_exactly(spark, sf_dir):
-    """Kill/restart where the RESTARTED query carries an evolved
-    6-field ValueState schema (trailing units_plus_n) over the 5-field
-    checkpoint, under Avro state encoding. The final compacted table
-    must equal the batch fold — pre-evolution state rows decoded with
-    the added field null, backfilled, and resumed exactly. The
-    processor poisons n_events when the backfill invariant breaks, so
-    equality here also certifies the decode."""
-    import pytest
-
-    from kafka_cdc_elasticsearch_pipeline_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no python protobuf and no vendorable copy on this host")
+    """The `t_state_schema_evolution_tws_v2` row (now the profile
+    operator's plain kill/restart: state-schema evolution left with the
+    v2 stateful API) must resume exactly — the final compacted table
+    equals the batch fold."""
     from kafka_cdc_elasticsearch_pipeline_spark.queries import QUERIES
     from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
 
@@ -785,16 +685,10 @@ def test_state_schema_evolution_v2_resumes_exactly(spark, sf_dir):
 
 
 def test_liststate_recent_events_matches_batch_topk(spark, sf_dir):
-    """v2 ListState: the streaming per-user top-3 recent events
-    (appendList → get → put each batch) must equal the batch top-3 by
+    """The streaming per-user top-3 recent events (state = flattened
+    ranked (ts, event_id) pairs) must equal the batch top-3 by
     (ts, event_id) DESC after max_by compaction on the monotone
     flattened sort key."""
-    import pytest
-
-    from kafka_cdc_elasticsearch_pipeline_spark.compat import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no python protobuf and no vendorable copy on this host")
     from kafka_cdc_elasticsearch_pipeline_spark.queries import QUERIES
     from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
 
