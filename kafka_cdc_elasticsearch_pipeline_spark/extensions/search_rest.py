@@ -75,7 +75,9 @@ Endpoints:
                                          # (default: min of applied
                                          # watermarks); bm25/ann take
                                          # "watermark" alone for
-                                         # single-index point-in-time
+                                         # single-index point-in-time;
+                                         # match_all has no index
+                                         # version, so either is a 400
 
   → ``{"took": ms, "hits": {"total": N, "relation": "eq"|"retrieved",
   "hits": [{"_id", "_score", "rank", "query_id"}]}, "fill":
@@ -86,7 +88,9 @@ Endpoints:
   multiple bm25 queries it counts (query, doc) match pairs), and the
   pre-pagination RETRIEVED count on the vector modes (``relation:
   "retrieved"`` — ES kNN retrieves exactly top-(from+k), the match
-  set is not enumerated). ``track_total_hits: false`` omits
+  set is not enumerated). On the eq paths the total is read from the
+  aggs tree's depth-0 row when one rides along, else it costs one
+  count() of the match set. ``track_total_hits: false`` omits
   ``total``/``relation`` entirely and skips the count pass (ES's
   own opt-out for consumers that page blindly). Free-text queries (``queries_text`` / ``query``)
   drive the LEXICAL signal — tokenized at serve time with the same
@@ -124,6 +128,12 @@ Endpoints:
   live (allowed) vector the index holds (the corpus is smaller than
   k), is reported in ``escalated`` with a ``skipped`` reason instead
   of paying a doubled-latency identical-result serve.
+
+Every ``/search`` body takes one path: the door validation, one branch
+per request shape (match_all, bm25, ann, rerank/rrf) that yields the
+hit frame and the match set, then one shared response tail. The aggs
+surface is ``search_serve``'s two entry points, ``validate_aggs`` at
+the door and ``aggregate`` in the tail.
 
 Error envelope: ``{"error": {"reason": ...}}`` with 400 for a request
 the caller can fix (validation, unknown mode, missing mounts/ids —
@@ -177,15 +187,6 @@ def _knob(req: dict, name: str, default: int) -> int:
     if not 1 <= v <= _MAX_KNOB:
         raise ValueError(f"'{name}' must be in [1, {_MAX_KNOB}], got {v}")
     return v
-
-
-
-def _hits_env(total, relation: str, hits: list, tth: bool) -> dict:
-    """The ES hits envelope, defined once: total/relation only when
-    track_total_hits is on (ES omits both with the opt-out)."""
-    if tth:
-        return {"total": total, "relation": relation, "hits": hits}
-    return {"hits": hits}
 
 
 class SearchRestServer:
@@ -456,82 +457,6 @@ class SearchRestServer:
             tuple(q for q, _ in rows),
         )
 
-    @staticmethod
-    def _composite_entry(aggs_spec) -> tuple[str, dict] | None:
-        """(name, body) when the aggs spec is a composite agg — which,
-        like in ES, must be the ONLY aggregation in the request (it
-        is a paging cursor over the bucket space, not a tree node)."""
-        if not isinstance(aggs_spec, dict):
-            return None
-        comps = [
-            (name, body)
-            for name, body in aggs_spec.items()
-            if isinstance(body, dict) and "composite" in body
-        ]
-        if not comps:
-            return None
-        if len(comps) > 1 or len(aggs_spec) > 1:
-            raise ValueError(
-                "a composite agg must be the only aggregation in the "
-                "request (it pages the bucket space; send siblings as "
-                "separate requests)"
-            )
-        name, body = comps[0]
-        extra = set(body) - {"composite", "aggs"}
-        if extra:
-            raise ValueError(
-                f"composite agg {name!r}: unknown keys {sorted(extra)}"
-            )
-        comp = dict(body["composite"])
-        if "aggs" in body:
-            # ES's actual shape: sub-aggs are a SIBLING of "composite"
-            # (review finding: they were silently dropped); the
-            # inside-the-body form stays accepted, sibling wins
-            comp["aggs"] = body["aggs"]
-        return name, comp
-
-    @staticmethod
-    def _filters_entry(aggs_spec) -> tuple[str, dict] | None:
-        """(name, body) when the aggs spec is a filters agg — which,
-        like composite, must be the ONLY aggregation in the request
-        (multi-membership cannot ride the shared rollup chain; it is
-        its own one-pass conditional aggregate, or — with a bucket
-        chain in its sub-aggs — one matched-filter explode feeding
-        the regular rollup one level down)."""
-        if not isinstance(aggs_spec, dict):
-            return None
-        hits = [
-            (name, body)
-            for name, body in aggs_spec.items()
-            if isinstance(body, dict) and "filters" in body
-        ]
-        if not hits:
-            return None
-        if len(hits) > 1 or len(aggs_spec) > 1:
-            raise ValueError(
-                "a filters agg must be the only aggregation in the "
-                "request (send siblings as separate requests)"
-            )
-        name, body = hits[0]
-        extra = set(body) - {"filters", "aggs"}
-        if extra:
-            raise ValueError(
-                f"filters agg {name!r}: unknown keys {sorted(extra)}"
-            )
-        if not isinstance(body["filters"], dict):
-            raise ValueError(
-                f"filters agg {name!r}: the 'filters' body must be an "
-                "object"
-            )
-        # ES's node shape: the TYPE body holds the named map
-        # ({name: {filters: {filters: {...}}, aggs: {...}}}) with
-        # sub-aggs a SIBLING of the type key — normalize to the
-        # serve-level {filters: {named}, aggs: {...}} form
-        node = dict(body["filters"])
-        if "aggs" in body:
-            node["aggs"] = body["aggs"]
-        return name, node
-
     def _allowed_df(self, req: dict, pred=None) -> DataFrame | None:
         """The request's keep-set: caller-supplied ``allowed_ids``
         ∩ the query-DSL filters' derived set (``pred``, a predicate
@@ -559,7 +484,17 @@ class SearchRestServer:
         return base
 
     def search(self, req: dict) -> dict:
-        """Per-request pin lifecycle around :meth:`_search`: frames a
+        """Serve one ``/search`` body. Every request takes one path
+        through :meth:`_search`: the door validation (knobs, ``sort``,
+        ``aggs`` via :func:`search_serve.validate_aggs`, ``watermark``/
+        ``pinned``), then one branch — match_all, bm25, ann or the
+        hybrid rerank/rrf — that yields the hit frame, the matched
+        frame and the frame ``hits.total`` counts, then one shared
+        tail: one :func:`search_serve.aggregate` call, one
+        ``hits.total`` rule, one ``fill``, one ``took`` stamp and one
+        envelope.
+
+        Per-request pin lifecycle around :meth:`_search`: frames a
         request references twice (the bm25 match set feeding both hits
         and aggs; the aggs bucket frame across truncation branches)
         are persisted for the request and ALWAYS unpersisted here —
@@ -579,10 +514,9 @@ class SearchRestServer:
         import time as _time
 
         t0 = _time.perf_counter()
-        # EVERY caller-fixable mistake is a 400 before any job — the
-        # match_all shortcut below must not exempt a request from the
-        # mode/knob discipline (review finding: a bogus mode or a
-        # string k rode the aggs-only path to a 200)
+        # EVERY caller-fixable mistake is a 400 before any job, for
+        # every request shape — match_all included (review finding: a
+        # bogus mode or a string k rode the aggs-only path to a 200)
         mode = req.get("mode", "rrf")
         if mode not in ("bm25", "ann", "rerank", "rrf"):
             raise ValueError(f"unknown mode {mode!r}")
@@ -626,42 +560,8 @@ class SearchRestServer:
                     "'aggs' needs a doc_source mounted on this server"
                 )
             # parse for validation errors now; compiled again over the
-            # matched frame once the mode branch has produced it
-            comp = self._composite_entry(aggs_spec)
-            filt = self._filters_entry(aggs_spec)
-            if comp is not None:
-                serve.parse_composite(comp[1], self.doc_source.columns)
-            elif filt is not None:
-                serve.validate_filters(filt[1], self.doc_source)
-            else:
-                # single-bucket filter/missing layers unwrap job-free
-                # (predicates compile lazily); then auto_date_histogram
-                # validates in stub mode (the min/max selection pass
-                # runs only once the mode branch has produced the
-                # matched frame)
-                inner = aggs_spec
-                while True:
-                    sb = serve._single_bucket_entry(
-                        self.doc_source, inner
-                    )
-                    if sb is None:
-                        break
-                    _, _, inner = sb
-                if inner:
-                    if self._composite_entry(
-                        inner
-                    ) is not None or self._filters_entry(
-                        inner
-                    ) is not None:
-                        raise ValueError(
-                            "composite/filters aggs are not served "
-                            "inside a filter/missing agg — send them "
-                            "with the predicate in query.bool.filter"
-                        )
-                    stubbed, _ = serve._resolve_auto_dh(
-                        self.doc_source, inner, resolve=False
-                    )
-                    serve.parse_aggs(stubbed, self.doc_source.columns)
+            # matched frame once the branch below has produced it
+            serve.validate_aggs(aggs_spec, self.doc_source)
         # ES query DSL: a dict "query" is the request shape Kibana
         # actually sends — bool.filter time-range/term pills around an
         # optional search-bar match. The match text becomes the plain
@@ -686,108 +586,28 @@ class SearchRestServer:
             req.get("query_ids") or req.get("queries")
             or req.get("queries_text") or req.get("query") is not None
         )
-        if (aggs_spec is not None or sort_spec is not None) and not has_query:
-            # match_all: the dashboard steady state — no query fields
-            # is the signal (ES would say match_all + size 0 / sort).
-            # aggs aggregate the whole mounted doc_source (∩
-            # allowed_ids); sort serves the Kibana SAVED-SEARCH shape
-            # (the reference's "Unhappy Platinum Customers" panel: an
-            # empty-query search sorted EXTRACT_TS desc) — a sorted
-            # page of the doc_source with absolute ranks.
-            matched = self.doc_source
-            allowed = self._allowed_df(req, dsl_pred)
-            if allowed is not None:
-                matched = matched.join(
-                    allowed.select(F.col("vec_id").alias("doc_id")),
-                    "doc_id",
-                    "left_semi",
-                )
-            if sort_spec is not None:
-                base = matched.select(
-                    F.lit(0).cast("bigint").alias("query_id"),
-                    F.col("doc_id").alias("_id"),
-                    # ES serves _score null on sorted match_all
-                    F.lit(None).cast("double").alias("_score"),
-                )
-                hits = self._collect_hits(
-                    serve.sorted_rank(
-                        base, self.doc_source, sort_spec, k_page,
-                        id_col="_id",
-                    )
-                )
-                if frm:
-                    hits = [h for h in hits if h["rank"] > frm]
-                # hits.total is the MATCH COUNT here, same as the
-                # aggs-only path (review finding: a page-sized total
-                # told saved-search consumers to stop paging); read it
-                # from the aggs depth-0 row when a tree rides along,
-                # else pay the one count(). Two passes over matched
-                # (sort window + rollup/count) are DELIBERATE: each is
-                # column-pruned to disjoint fields, while pinning the
-                # corpus-scale frame would materialize every column.
-                aggregations = None
-                total = None
-                if aggs_spec is not None:
-                    comp = self._composite_entry(aggs_spec)
-                    filt = self._filters_entry(aggs_spec)
-                    if comp is not None:
-                        aggregations = {
-                            comp[0]: serve.composite_nested(
-                                matched, comp[1], pins
-                            )
-                        }
-                    elif filt is not None:
-                        aggregations = {
-                            filt[0]: serve.filters_nested(
-                                matched, filt[1], pins
-                            )
-                        }
-                    else:
-                        aggregations, total = serve.aggs_nested(
-                            matched, aggs_spec, pins, with_total=True
-                        )
-                if total is None and tth:
-                    total = matched.count()
-                out = {
-                    "hits": _hits_env(total, "eq", hits, tth),
-                    "fill": si.fill_counts(
-                        (h["query_id"] for h in hits), (0,), k
-                    ),
-                }
-                if aggregations is not None:
-                    out["aggregations"] = aggregations
-                out["took"] = int((_time.perf_counter() - t0) * 1000)
-                return out
-            # hits.total = the depth-0 rollup row's doc_count — a
-            # second count() scan of doc_source would double the
-            # dominant cost (review finding); took stamped AFTER the
-            # work, not before it. A composite page has no depth-0
-            # row (it is one LIMIT-bounded groupBy page), so only
-            # that path pays a count().
-            comp = self._composite_entry(aggs_spec)
-            filt = self._filters_entry(aggs_spec)
-            if comp is not None:
-                aggregations = {
-                    comp[0]: serve.composite_nested(matched, comp[1], pins)
-                }
-                total = matched.count() if tth else None
-            elif filt is not None:
-                # like composite: no depth-0 row — one count() if the
-                # total is tracked
-                aggregations = {
-                    filt[0]: serve.filters_nested(matched, filt[1], pins)
-                }
-                total = matched.count() if tth else None
-            else:
-                aggregations, total = serve.aggs_nested(
-                    matched, aggs_spec, pins, with_total=True
-                )
-            return {
-                "took": int((_time.perf_counter() - t0) * 1000),
-                "hits": _hits_env(total, "eq", [], tth),
-                "fill": [],
-                "aggregations": aggregations,
-            }
+        # the point-in-time fields validate on EVERY request too
+        wm = req.get("watermark")
+        if wm is not None and (not isinstance(wm, int) or wm < 1):
+            raise ValueError(
+                f"'watermark' must be a positive integer, got {wm!r}"
+            )
+        if req.get("pinned") and mode in ("bm25", "ann"):
+            raise ValueError(
+                "'pinned' applies to rerank/rrf (two-signal consistency); "
+                "for single-index point-in-time pass 'watermark'"
+            )
+        # match_all: the dashboard steady state — no query fields is the
+        # signal (ES would say match_all + size 0 / sort)
+        match_all = (
+            aggs_spec is not None or sort_spec is not None
+        ) and not has_query
+        if match_all and (wm is not None or req.get("pinned")):
+            raise ValueError(
+                "a match_all request reads the mounted doc_source, which "
+                "has no index version to pin — 'watermark'/'pinned' need "
+                "a query"
+            )
         # Pagination composes with the hybrid POOL: a rerank/rrf serve
         # can only return hits its pool-deep retrieve stages nominated,
         # so a page past the pool depth (from=30 with pool=20) would
@@ -804,26 +624,27 @@ class SearchRestServer:
         # (round-11 review finding)
         ivfpq_root: str | None = None
         escalated: dict | None = None
-        match_ids: DataFrame | None = None
-        bm25_scored: DataFrame | None = None
+        # what each branch below produces for the shared tail: the hit
+        # frame to rank (None = no hits), the aggs frame (None = the
+        # vector modes' retrieved set, known only after the collect)
+        # and the frame hits.total counts (None = the vector modes'
+        # retrieved count)
+        df: DataFrame | None = None
+        matched: DataFrame | None = None
+        count_df: DataFrame | None = None
 
         def _maybe_sorted(df: DataFrame) -> DataFrame:
             """ES ``sort``: re-rank by the doc-metadata fields and cut
-            at the page depth. bm25 passes its UNCUT match set (deep
-            sorted pages reach docs relevance would never nominate);
-            the vector modes pass their retrieved top-k_page frame
-            (ES kNN+sort re-orders within the k retrieved)."""
+            at the page depth. bm25 and match_all pass their UNCUT
+            match set (deep sorted pages reach docs relevance would
+            never nominate); the vector modes pass their retrieved
+            top-k_page frame (ES kNN+sort re-orders within the k
+            retrieved)."""
             if sort_spec is None:
                 return df
             return serve.sorted_rank(
                 df.drop("rank") if "rank" in df.columns else df,
                 self.doc_source, sort_spec, k_page, id_col="_id",
-            )
-
-        wm = req.get("watermark")
-        if wm is not None and (not isinstance(wm, int) or wm < 1):
-            raise ValueError(
-                f"'watermark' must be a positive integer, got {wm!r}"
             )
 
         def pinned_at(root, app_id, side):
@@ -837,11 +658,6 @@ class SearchRestServer:
                     f"'watermark' needs {side} mounted on this server"
                 )
             return si.index_versions_at_watermark(root, app_id, wm)
-        if req.get("pinned") and mode in ("bm25", "ann"):
-            raise ValueError(
-                "'pinned' applies to rerank/rrf (two-signal consistency); "
-                "for single-index point-in-time pass 'watermark'"
-            )
         if mode == "ann" and (
             req.get("query") is not None or req.get("queries_text")
         ):
@@ -933,7 +749,35 @@ class SearchRestServer:
                 if allowed is None
                 else conj.join(allowed, "vec_id", "left_semi")
             )
-        if mode == "bm25":
+        if match_all:
+            # aggs aggregate the whole mounted doc_source (∩
+            # allowed_ids); sort serves the Kibana SAVED-SEARCH shape
+            # (the reference's "Unhappy Platinum Customers" panel: an
+            # empty-query search sorted EXTRACT_TS desc) — a sorted
+            # page of the doc_source with absolute ranks. hits.total is
+            # the MATCH COUNT on both (a page-sized total told
+            # saved-search consumers to stop paging). Two passes over
+            # matched (sort window + rollup/count) are DELIBERATE: each
+            # is column-pruned to disjoint fields, while pinning the
+            # corpus-scale frame would materialize every column.
+            matched = self.doc_source
+            if allowed is not None:
+                matched = matched.join(
+                    allowed.select(F.col("vec_id").alias("doc_id")),
+                    "doc_id",
+                    "left_semi",
+                )
+            count_df = matched
+            req_ids = ()
+            if sort_spec is not None:
+                req_ids = (0,)
+                df = matched.select(
+                    F.lit(0).cast("bigint").alias("query_id"),
+                    F.col("doc_id").alias("_id"),
+                    # ES serves _score null on sorted match_all
+                    F.lit(None).cast("double").alias("_score"),
+                )
+        elif mode == "bm25":
             if self.bm25_root is None:
                 raise ValueError("no bm25 index mounted")
             qtext, text_ids = self._queries_text_df(req)
@@ -996,11 +840,14 @@ class SearchRestServer:
             ):
                 scored = scored.persist()
                 pins.append(scored)
-            bm25_scored = scored
+            count_df = scored
             if aggs_spec is not None:
                 # aggs run over ALL matching docs (the full match set,
-                # never the hit page) — stash it pre-rank, post-filter
-                match_ids = scored.select("doc_id").distinct()
+                # never the hit page) — taken pre-rank, post-filter
+                matched = self.doc_source.join(
+                    scored.select("doc_id").distinct(), "doc_id",
+                    "left_semi",
+                )
             base = scored.select(
                 "query_id",
                 F.col("doc_id").alias("_id"),
@@ -1062,63 +909,48 @@ class SearchRestServer:
                     "ivfpq_app_id mounted on this server"
                 )
             ivfpq_root = self.ivfpq_root
-            if mode == "rerank" and pinned:
-                df = si.hybrid_search_rerank_at_watermark(
-                    self.spark, self.bm25_root, ivfpq_root, qdf,
-                    query_ids=req_ids, pool=pool, k=k_page,
+            kw: dict = {}
+            if mode == "rrf":
+                kw["nprobe"] = nprobe
+            if pinned:
+                kw.update(
                     bm25_app_id=self.bm25_app_id,
                     ivfpq_app_id=self.ivfpq_app_id,
                     watermark=wm,
-                    queries_text=qtext, allowed_ids=allowed,
-                ).select(
-                    "query_id",
-                    F.col("doc_id").alias("_id"),
-                    F.col("cosine").alias("_score"),
-                    "rank",
                 )
-            elif mode == "rerank":
-                df = si.hybrid_search_from_cdc_indexes(
-                    self.spark, self.bm25_root, ivfpq_root, qdf,
-                    query_ids=req_ids, pool=pool, k=k_page,
-                    queries_text=qtext, allowed_ids=allowed,
-                ).select(
-                    "query_id",
-                    F.col("doc_id").alias("_id"),
-                    F.col("cosine").alias("_score"),
-                    "rank",
-                )
-            elif pinned:
-                df = si.hybrid_search_rrf_at_watermark(
-                    self.spark, self.bm25_root, ivfpq_root, qdf,
-                    query_ids=req_ids, pool=pool, k=k_page, nprobe=nprobe,
-                    bm25_app_id=self.bm25_app_id,
-                    ivfpq_app_id=self.ivfpq_app_id,
-                    watermark=wm,
-                    queries_text=qtext, allowed_ids=allowed,
-                ).select(
-                    "query_id",
-                    F.col("doc_id").alias("_id"),
-                    F.col("rrf").alias("_score"),
-                    "rank",
+            if mode == "rerank":
+                score = "cosine"
+                fn = (
+                    si.hybrid_search_rerank_at_watermark
+                    if pinned
+                    else si.hybrid_search_from_cdc_indexes
                 )
             else:
-                df = si.hybrid_search_rrf_from_cdc_indexes(
-                    self.spark, self.bm25_root, ivfpq_root, qdf,
-                    query_ids=req_ids, pool=pool, k=k_page, nprobe=nprobe,
-                    queries_text=qtext, allowed_ids=allowed,
-                ).select(
-                    "query_id",
-                    F.col("doc_id").alias("_id"),
-                    F.col("rrf").alias("_score"),
-                    "rank",
+                score = "rrf"
+                fn = (
+                    si.hybrid_search_rrf_at_watermark
+                    if pinned
+                    else si.hybrid_search_rrf_from_cdc_indexes
                 )
-        if aggs_spec is not None and len(set(req_ids)) != 1:
+            df = fn(
+                self.spark, self.bm25_root, ivfpq_root, qdf,
+                query_ids=req_ids, pool=pool, k=k_page,
+                queries_text=qtext, allowed_ids=allowed, **kw,
+            ).select(
+                "query_id",
+                F.col("doc_id").alias("_id"),
+                F.col(score).alias("_score"),
+                "rank",
+            )
+        if aggs_spec is not None and len(set(req_ids)) > 1:
+            # (every query mode has at least one id; match_all has none,
+            # or the sorted page's one)
             raise ValueError(
                 "'aggs' takes exactly one query per request (ES's "
                 "shape) — or no query at all for match_all"
             )
-        hits = self._collect_hits(_maybe_sorted(df))
-        if mode == "ann" and req.get("escalate", True):
+        hits = [] if df is None else self._collect_hits(_maybe_sorted(df))
+        if mode == "ann" and not match_all and req.get("escalate", True):
             # one automatic nprobe escalation for underfilled queries
             # (the filtered-ANN fill caveat: a selective allowed-set
             # can leave < k allowed vectors in nprobe buckets; the
@@ -1196,51 +1028,38 @@ class SearchRestServer:
         agg_total: int | None = None
         if aggs_spec is not None:
             # aggs are over ALL matching docs, never the hit page: the
-            # bm25 match set (stashed pre-rank), or a vector mode's
-            # full retrieved set (PRE-pagination, post-escalation —
-            # ES kNN aggregates over the k nearest)
-            if match_ids is None:
+            # match_all frame, the bm25 match set (taken pre-rank), or
+            # a vector mode's full retrieved set (PRE-pagination,
+            # post-escalation — ES kNN aggregates over the k nearest)
+            if matched is None:
                 ids = sorted({int(h["_id"]) for h in hits})
-                match_ids = self.spark.createDataFrame(
-                    [(i,) for i in ids], "doc_id bigint"
+                matched = self.doc_source.join(
+                    self.spark.createDataFrame(
+                        [(i,) for i in ids], "doc_id bigint"
+                    ),
+                    "doc_id",
+                    "left_semi",
                 )
-            matched = self.doc_source.join(match_ids, "doc_id", "left_semi")
-            comp = self._composite_entry(aggs_spec)
-            filt = self._filters_entry(aggs_spec)
-            if comp is not None:
-                aggregations = {
-                    comp[0]: serve.composite_nested(matched, comp[1], pins)
-                }
-            elif filt is not None:
-                aggregations = {
-                    filt[0]: serve.filters_nested(matched, filt[1], pins)
-                }
-            else:
-                aggregations, agg_total = serve.aggs_nested(
-                    matched, aggs_spec, pins, with_total=True
-                )
-        # hits.total (round-12 advice #3): bm25 serves the MATCH-SET
-        # size — ES's total, identical on every page, what a
+            aggregations, agg_total = serve.aggregate(
+                matched, aggs_spec, pins
+            )
+        # hits.total (round-12 advice #3): match_all and bm25 serve the
+        # MATCH-SET size — ES's total, identical on every page, what a
         # saved-search consumer sizes its pager from — read free from
-        # the aggs depth-0 row when a tree rides along (one query →
-        # pairs = distinct docs), else one extra pass over the PINNED
-        # match set (multi-query: the total counts (query, doc) match
+        # the aggs depth-0 row when a tree rides along (a second count()
+        # scan would double the dominant cost; one query → pairs =
+        # distinct docs), else one count() of the match set, pinned on
+        # bm25 (multi-query: the total counts (query, doc) match
         # pairs). The vector modes retrieve exactly top-(from+k);
         # their total is the RETRIEVED count pre-pagination (ES kNN
         # semantics), flagged relation: "retrieved" so a consumer can
         # tell the two meanings apart.
-        if mode == "bm25":
-            relation = "eq"
-            total = None
-            if tth:
-                total = (
-                    agg_total
-                    if agg_total is not None
-                    else bm25_scored.count()
-                )
+        if count_df is None:
+            relation, total = "retrieved", len(hits)
         else:
-            relation = "retrieved"
-            total = len(hits)
+            relation, total = "eq", agg_total
+            if total is None and tth:
+                total = count_df.count()
         # the page slice applies AFTER escalation: underfill and its
         # bounds are judged on the ranks the serve minted, and a page
         # past the end must not read as a recoverable shortfall
@@ -1253,7 +1072,13 @@ class SearchRestServer:
         fill = si.fill_counts((h["query_id"] for h in hits), req_ids, k)
         out = {
             "took": int((_time.perf_counter() - t0) * 1000),
-            "hits": _hits_env(total, relation, hits, tth),
+            # total/relation only when track_total_hits is on (ES
+            # omits both with the opt-out)
+            "hits": (
+                {"total": total, "relation": relation, "hits": hits}
+                if tth
+                else {"hits": hits}
+            ),
             "fill": fill,
         }
         if escalated is not None:

@@ -43,6 +43,13 @@ REST face (``search_rest.py``) those two missing consumer surfaces:
   LIMIT (TakeOrderedAndProject), so a million-bucket space serves in
   ``size``-bounded pages instead of hitting the MAX_BUCKETS cap.
 
+The REST face enters through two functions and nothing else:
+:func:`validate_aggs` is the job-free door check of an ``aggs`` body
+(single-bucket filter/missing layers unwrapped, ``auto_date_histogram``
+in stub mode), and :func:`aggregate` picks the family — composite,
+filters or the rollup tree — and returns the ``aggregations`` envelope
+plus the tree's free match-set size.
+
 Scale notes: the heavy lifting is the one ``rollup`` over the matched
 set — shuffle on the bucket keys with map-side combine, exactly the
 plan the green ``a4_*`` dashboard-agg rows run; everything after it
@@ -3886,17 +3893,13 @@ def composite_flat(docs: DataFrame, body: dict) -> DataFrame:
     ).limit(size)
 
 
-def composite_nested(
-    docs: DataFrame, body: dict, pins: list[DataFrame] | None = None
-) -> dict:
+def composite_nested(docs: DataFrame, body: dict) -> dict:
     """ES's composite response envelope: ``buckets`` (each key a
     {name: value} object, dates as epoch millis) in key order, plus
     ``after_key`` = the last bucket's key on EVERY non-empty page
     (ES's wire shape — partial final pages included; the consumer's
-    stop signal is the next page coming back empty). ``pins`` is
-    accepted for symmetry with aggs_nested; the page is
-    LIMIT-bounded, nothing here needs pinning."""
-    del pins  # one bounded plan — no frame is referenced twice
+    stop signal is the next page coming back empty). The page is one
+    LIMIT-bounded plan, so nothing here needs pinning."""
     keys, metrics, _size, _ = parse_composite(body, docs.columns)
     rows = [r.asDict() for r in composite_flat(docs, body).collect()]
     buckets = []
@@ -4501,6 +4504,93 @@ def filters_product_flat(docs: DataFrame, body: dict) -> DataFrame:
                 + [row[f"f{i}_g{j}__{c}"] for c in icols]
             ))
     return docs.sparkSession.createDataFrame(data, schema)
+
+
+# --- the REST aggregation entry -----------------------------------------------
+
+
+def _sole_entry(spec, typ: str) -> tuple[str, dict] | None:
+    """(name, body) when ``spec`` holds a ``typ`` agg (``composite`` or
+    ``filters``) — which, like in ES, must be the ONLY aggregation in
+    the request: composite pages the bucket space, and filters'
+    multi-membership cannot ride the shared rollup chain. Sub-aggs
+    are a SIBLING of the type key in ES's node shape; the body comes
+    back in the serve-level ``{typ body..., aggs: {...}}`` form."""
+    if not isinstance(spec, dict):
+        return None
+    found = [
+        (name, body)
+        for name, body in spec.items()
+        if isinstance(body, dict) and typ in body
+    ]
+    if not found:
+        return None
+    if len(found) > 1 or len(spec) > 1:
+        raise ValueError(
+            f"a {typ} agg must be the only aggregation in the request "
+            "(send siblings as separate requests)"
+        )
+    name, body = found[0]
+    extra = set(body) - {typ, "aggs"}
+    if extra:
+        raise ValueError(f"{typ} agg {name!r}: unknown keys {sorted(extra)}")
+    if not isinstance(body[typ], dict):
+        raise ValueError(
+            f"{typ} agg {name!r}: the '{typ}' body must be an object"
+        )
+    node = dict(body[typ])
+    if "aggs" in body:
+        # the inside-the-body form stays accepted; the sibling wins
+        node["aggs"] = body["aggs"]
+    return name, node
+
+
+def validate_aggs(spec, docs: DataFrame) -> None:
+    """The REST door's check of an ``aggs`` body against the mounted
+    doc_source — every caller-fixable mistake is a ValueError before
+    any job runs. Single-bucket filter/missing layers unwrap job-free
+    (their predicates compile lazily); ``auto_date_histogram`` is
+    validated in stub mode (its min/max pass runs in
+    :func:`aggregate`, over the matched frame)."""
+    comp = _sole_entry(spec, "composite")
+    filt = _sole_entry(spec, "filters")
+    if comp is not None:
+        parse_composite(comp[1], docs.columns)
+        return
+    if filt is not None:
+        validate_filters(filt[1], docs)
+        return
+    inner = spec
+    while (sb := _single_bucket_entry(docs, inner)) is not None:
+        inner = sb[2]
+    if not inner:
+        return
+    if (_sole_entry(inner, "composite") is not None
+            or _sole_entry(inner, "filters") is not None):
+        raise ValueError(
+            "composite/filters aggs are not served inside a "
+            "filter/missing agg — send them with the predicate in "
+            "query.bool.filter"
+        )
+    stubbed, _ = _resolve_auto_dh(docs, inner, resolve=False)
+    parse_aggs(stubbed, docs.columns)
+
+
+def aggregate(
+    docs: DataFrame, spec, pins: list[DataFrame] | None = None
+) -> tuple[dict, int | None]:
+    """The ``aggregations`` envelope of a validated ``aggs`` body over
+    the matched frame, plus the match-set size when the plan yields it
+    for free (a tree's depth-0 rollup row). A composite page or a
+    filters agg has no depth-0 row, so their total is None and the
+    caller pays one count() if it needs one."""
+    comp = _sole_entry(spec, "composite")
+    if comp is not None:
+        return {comp[0]: composite_nested(docs, comp[1])}, None
+    filt = _sole_entry(spec, "filters")
+    if filt is not None:
+        return {filt[0]: filters_nested(docs, filt[1], pins)}, None
+    return aggs_nested(docs, spec, pins, with_total=True)
 
 
 # --- Kibana saved-object translation ------------------------------------------

@@ -219,6 +219,10 @@ def es_sink_foreach_batch(
         ).start()
     """
 
+    if errors_tolerance not in ("none", "all"):
+        raise ValueError(
+            f"errors.tolerance must be none|all, got {errors_tolerance!r}"
+        )
     if null_value_behavior not in ("ignore", "delete", "fail"):
         raise ValueError(
             f"behavior.on.null.values must be ignore|delete|fail,"

@@ -111,6 +111,17 @@ def test_errors_tolerance_none_raises(spark):
         sink(df, 0)
 
 
+def test_errors_tolerance_rejects_unknown_values():
+    """errors.tolerance is none|all (Kafka Connect's domain): any other
+    value is a config error when the sink is built, never a silent
+    fall-through to "none"."""
+    for bad in ("ALL", "warn", "", None):
+        with pytest.raises(ValueError, match=r"must be none\|all"):
+            es_sink_foreach_batch(
+                "http://fake:9200", "ratings", errors_tolerance=bad
+            )
+
+
 def test_errors_tolerance_all_routes_to_dlq(spark):
     """T8 — errors.tolerance=all (ksqldb-statements.sql:74-77): failed
     docs land in the dead-letter path; the query does not fail."""

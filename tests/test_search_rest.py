@@ -1178,6 +1178,57 @@ def test_match_all_validates_like_any_request(meta_server):
     out = server.search({"aggs": _AGGS})
     assert out["hits"]["total"] == meta.count()
     assert out["took"] >= 1  # stamped after the rollup ran, not before
+    # the point-in-time fields are validated on match_all too: a
+    # malformed one is the same 400 as on a query, and a well-formed
+    # one is a 400 as well — the doc_source has no version to pin
+    aggs = {"by_lang": {"terms": {"field": "lang"}}}
+    for extra, msg in (
+        ({"watermark": "bogus"}, "'watermark' must be"),
+        ({"watermark": -3}, "'watermark' must be"),
+        ({"pinned": True, "mode": "bm25"}, "'pinned' applies to"),
+        ({"watermark": 3}, "no index version to pin"),
+        ({"pinned": True}, "no index version to pin"),
+    ):
+        with pytest.raises(ValueError, match=msg):
+            server.search({"aggs": aggs, **extra})
+    with pytest.raises(ValueError, match="no index version to pin"):
+        server.search({"sort": [{"field": "ts"}], "watermark": 3})
+
+
+def test_served_shapes_count_passes(meta_server, monkeypatch):
+    """hits.total costs at most one count() pass per request, and none
+    when an aggs tree rides along (its depth-0 rollup row holds the
+    match-set size): the count() calls each served shape makes."""
+    server, meta = meta_server
+    frame_cls = type(meta)  # the concrete DataFrame class in use
+    calls = []
+    real_count = frame_cls.count
+
+    def counting(self):
+        calls.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(frame_cls, "count", counting)
+    comp = {"pages": {"composite": {
+        "size": 4, "sources": [{"lang": {"terms": {"field": "lang"}}}],
+    }}}
+    srt = [{"field": "ts", "order": "desc"}]
+    shapes = {
+        "aggs-only tree match_all": ({"aggs": _AGGS}, 0),
+        "sorted match_all": ({"sort": srt}, 1),
+        "sorted match_all + tree": ({"sort": srt, "aggs": _AGGS}, 0),
+        "composite match_all": ({"aggs": comp}, 1),
+        "composite match_all, untracked total": (
+            {"aggs": comp, "track_total_hits": False}, 0,
+        ),
+        "bm25 + tree": ({"mode": "bm25", "query": "dup", "aggs": _AGGS}, 0),
+    }
+    got = {}
+    for name, (body, _) in shapes.items():
+        calls.clear()
+        server.search(body)
+        got[name] = len(calls)
+    assert got == {name: n for name, (_, n) in shapes.items()}
 
 
 def test_composite_aggs_over_rest(meta_server):
