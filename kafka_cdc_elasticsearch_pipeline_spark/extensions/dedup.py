@@ -125,17 +125,6 @@ def _jaccard(a_sh: str, b_sh: str) -> F.Column:
     return inter.cast("double") / union
 
 
-def minhash_candidates(
-    docs: DataFrame,
-    k: int = NUM_MINHASH,
-    rows_per_band: int = LSH_ROWS_PER_BAND,
-) -> DataFrame:
-    """LSH band-collision candidate pairs (doc_a, doc_b), unverified —
-    the candidate-generation stage of ``minhash_lsh_pairs``, factored
-    out so other operators (the ngram df-cap fallback) can reuse it."""
-    return _minhash_candidates_from(_doc_shingle_hashsets(docs), k, rows_per_band)
-
-
 def _minhash_candidates_from(
     sh60: DataFrame,
     k: int = NUM_MINHASH,

@@ -49,14 +49,6 @@ def _chunk(tag: bytes, body: bytes) -> bytes:
     )
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
 def png_encode(pixels: np.ndarray, filter_cycle: tuple[int, ...] = (0, 1, 2, 3, 4)) -> bytes:
     """Encode an (h, w) or (h, w, ch) uint8 array; scanline filter
     types cycle through ``filter_cycle`` so a round-trip exercises

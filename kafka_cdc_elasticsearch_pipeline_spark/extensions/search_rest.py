@@ -587,12 +587,19 @@ class SearchRestServer:
             or req.get("queries_text") or req.get("query") is not None
         )
         # the point-in-time fields validate on EVERY request too
+        # (a JSON true is a Python int: it is no watermark)
         wm = req.get("watermark")
-        if wm is not None and (not isinstance(wm, int) or wm < 1):
+        if wm is not None and (
+            not isinstance(wm, int) or isinstance(wm, bool) or wm < 1
+        ):
             raise ValueError(
                 f"'watermark' must be a positive integer, got {wm!r}"
             )
-        if req.get("pinned") and mode in ("bm25", "ann"):
+        pinned = req.get("pinned")
+        if pinned is not None and not isinstance(pinned, bool):
+            raise ValueError(f"'pinned' must be a boolean, got {pinned!r}")
+        pinned = bool(pinned)
+        if pinned and mode in ("bm25", "ann"):
             raise ValueError(
                 "'pinned' applies to rerank/rrf (two-signal consistency); "
                 "for single-index point-in-time pass 'watermark'"
@@ -602,7 +609,7 @@ class SearchRestServer:
         match_all = (
             aggs_spec is not None or sort_spec is not None
         ) and not has_query
-        if match_all and (wm is not None or req.get("pinned")):
+        if match_all and (wm is not None or pinned):
             raise ValueError(
                 "a match_all request reads the mounted doc_source, which "
                 "has no index version to pin — 'watermark'/'pinned' need "
@@ -703,7 +710,7 @@ class SearchRestServer:
                     "text index"
                 )
             conj_at = bm25_at
-            if mode != "bm25" and (req.get("pinned") or wm is not None):
+            if mode != "bm25" and (pinned or wm is not None):
                 # the hybrid pinned serve resolves BOTH indexes at ONE
                 # source watermark; the conjunction keep-set must come
                 # from the SAME bm25 state or membership could
@@ -896,7 +903,7 @@ class SearchRestServer:
                     f"'queries_text' ids {sorted(text_ids)} must match "
                     f"the vector query ids {sorted(req_ids)}"
                 )
-            pinned = bool(req.get("pinned")) or wm is not None
+            pinned = pinned or wm is not None
             if pinned and (
                 self.bm25_app_id is None or self.ivfpq_app_id is None
             ):

@@ -2210,6 +2210,10 @@ def parse_aggs(spec: dict, columns: list[str]) -> tuple[
                     f"agg {b.name!r}: field {fld!r} not in the mounted "
                     f"doc_source (columns: {sorted(columns)})"
                 )
+    for col in _level_totals(chain).values():
+        if col in reserved:
+            raise ValueError(f"agg name {col!r} is reserved")
+        reserved.add(col)
     for ms in metrics.values():
         for m in ms:
             # the NAME matters too: a multi-column metric (stats,
@@ -2409,6 +2413,17 @@ def parse_aggs(spec: dict, columns: list[str]) -> tuple[
     return chain, metrics, tophits, pipelines
 
 
+def _level_totals(chain: list[_Bucket]) -> dict[int, str]:
+    """Depth → flat column of each terms level's total: on each
+    parent row, the Σ doc_count of the level's buckets under it, kept
+    or not."""
+    return {
+        d: f"{b.name}__n"
+        for d, b in enumerate(chain, start=1)
+        if b.typ in ("terms", "multi_terms")
+    }
+
+
 def _rollup_flat(
     docs: DataFrame,
     chain: list[_Bucket],
@@ -2420,7 +2435,13 @@ def _rollup_flat(
     null-out so each metric column carries values only at its node's
     level. Genuinely-NULL bucket keys (ES: the doc is in no bucket at
     that level, nor any child) are dropped AFTER the rollup — their
-    docs still count in the parent row's doc_count, exactly ES."""
+    docs still count in the parent row's doc_count, exactly ES.
+
+    Each terms level d also gets its total (:func:`_level_totals`) on the
+    depth-(d-1) rows: ``count`` of the non-NULL level key, which is
+    exactly the Σ doc_count of the parent's depth-d rows. The
+    envelope reads ``sum_other_doc_count`` as that total minus the
+    kept buckets, so truncation needs no second pass for it."""
     names = [b.name for b in chain]
     keyed = docs.select(
         *[b.key_col().alias(b.name) for b in chain],
@@ -2430,6 +2451,10 @@ def _rollup_flat(
     for ms in metrics.values():
         for m in ms:
             aggs.extend(m.exprs())
+    totals = _level_totals(chain)
+    for d, col in totals.items():
+        # inside an aggregate a rollup key reads its un-rolled value
+        aggs.append(F.count(names[d - 1]).cast("bigint").alias(col))
     if not names:
         flat = keyed.agg(*aggs).withColumn("depth", F.lit(0).cast("int"))
         return flat.select("depth", "doc_count", *_metric_cols(metrics))
@@ -2462,6 +2487,8 @@ def _rollup_flat(
                 sel.append(
                     F.when(F.col("depth") == d, F.col(col)).alias(col)
                 )
+    for d, col in totals.items():
+        sel.append(F.when(F.col("depth") == d - 1, F.col(col)).alias(col))
     return g.select(*sel)
 
 
@@ -2495,25 +2522,26 @@ def _truncate_terms(
     chain: list[_Bucket],
     metrics: dict[int, list[_Metric]] | None = None,
     pins: list[DataFrame] | None = None,
-) -> tuple[DataFrame, list[tuple[int, DataFrame]]]:
+) -> DataFrame:
     """Apply each terms level's ``size`` (top-N per parent by
     doc_count desc, key asc — ES's default order) on the BUCKET frame,
-    pruning deeper rows to kept parents. Returns the truncated frame
-    plus per-level "others" frames (parent keys → Σ truncated
-    doc_count) for ES's ``sum_other_doc_count``.
+    pruning deeper rows to kept parents. ``sum_other_doc_count`` needs
+    no frame of its own: the parent rows carry each terms level's
+    total (:func:`_rollup_flat`), and the envelope subtracts the kept
+    buckets.
 
-    The keep-list semi-join and the kept/uncut union reference the
-    rollup frame from several plan positions, and Spark recomputes a
-    subtree per reference — for this frame that means re-running the
-    WHOLE match-set rollup (scan included) once per reference, a 3×
-    heavy pass at 100 TB. The rollup output is bucket-count-sized
-    (≤ MAX_BUCKETS by the serve contract), so ``reuse()`` pins it
-    once and every branch reads the pin — the same
-    one-corpus-scan-not-two fix the dedup band tables use. (On a
-    trivially-recomputable source the pin's materialization barrier
-    costs a little — measured ~2s on a 3M-row ``range()`` — but the
-    serve path's matched frame is a parquet corpus semi-join, where
-    recomputation is the catastrophic direction.)
+    The keep-list window, the semi-join, the union and the
+    ``other_bucket`` merges all reference the rollup frame, and Spark
+    recomputes a subtree per reference — for this frame that means
+    re-running the WHOLE match-set rollup (scan included) once per
+    reference. ``caching.pin`` persists it once and returns a frame
+    rooted on the cached relation, so every branch reads that one
+    materialization. (A plain ``persist()`` is not enough on Spark
+    4.1.2: ``DeduplicateRelations`` re-instances the rollup's
+    ``Expand`` in each further reference, that reference no longer
+    matches the cached plan, and it re-scans the docs — a warm
+    dashboard panel ran its rollup four times.) The rollup output is
+    bucket-count-sized, so the pin is small.
 
     Pin lifecycle: with ``pins=None`` the pin goes through ``reuse()``
     — the registry lifecycle (gate rows, batch pipelines) releases it
@@ -2525,13 +2553,9 @@ def _truncate_terms(
     if any(b.typ in ("terms", "multi_terms") for b in chain):
         from kafka_cdc_elasticsearch_pipeline_spark.operators import caching
 
-        if pins is None:
-            flat = caching.reuse(flat)
-        elif caching.pinning_enabled():
-            flat = flat.persist()
-            pins.append(flat)
+        flat = caching.pin(flat, pins)
     names = [b.name for b in chain]
-    others: list[tuple[int, DataFrame]] = []
+    totals = _level_totals(chain)
     for d, b in enumerate(chain, start=1):
         if b.typ not in ("terms", "multi_terms"):
             continue
@@ -2553,16 +2577,6 @@ def _truncate_terms(
         )
         ranked = cand.withColumn("_rn", F.row_number().over(w))
         keep = ranked.filter(F.col("_rn") <= b.size).select(*names[:d])
-        # sum_other = docs at this level NOT in a returned bucket —
-        # size-truncated and min_doc_count-pruned alike (anti-join on
-        # the keep-list; for the default mdc=1 this equals the old
-        # rank-beyond-size sum)
-        others.append((
-            d,
-            lvl.join(keep, names[:d], "left_anti")
-            .groupBy(*names[: d - 1])
-            .agg(F.sum("doc_count").cast("bigint").alias("sum_other")),
-        ))
         pruned = flat.filter(F.col("depth") < d).unionByName(
             flat.filter(F.col("depth") >= d).join(keep, names[:d], "left_semi")
         )
@@ -2604,6 +2618,12 @@ def _truncate_terms(
                 ]
                 for m in lvl_metrics:
                     merge_aggs.extend(m.merge_exprs())
+                # the next terms level's total merges too: it is that
+                # level's sum_other base under the merged bucket
+                below = [totals[d2 + 1]] if d2 + 1 in totals else []
+                merge_aggs.extend(
+                    F.sum(c).cast("bigint").alias(c) for c in below
+                )
                 group_keys = names[: d - 1] + names[d:d2]
                 grp = (
                     flat.filter(F.col("depth") == d2)
@@ -2611,7 +2631,7 @@ def _truncate_terms(
                     .groupBy(*group_keys)
                     .agg(*merge_aggs)
                 )
-                merged_cols = {"doc_count"} | {
+                merged_cols = {"doc_count", *below} | {
                     c for m in lvl_metrics for c in m.columns
                 }
                 sel: list[Column] = []
@@ -2625,6 +2645,11 @@ def _truncate_terms(
                             F.lit("__other__").cast(fld.dataType)
                             .alias(fld.name)
                         )
+                    elif d2 == d and fld.name == totals[d]:
+                        # marks the fabricated row: its level's
+                        # total is otherwise NULL at this depth, so
+                        # the envelope never counts it as kept
+                        sel.append(F.col("doc_count").alias(fld.name))
                     elif (
                         fld.name in group_keys
                         or fld.name in merged_cols
@@ -2645,7 +2670,7 @@ def _truncate_terms(
                     grp.select(*sel).filter(F.col("doc_count") > 0)
                 )
         flat = pruned
-    return flat, others
+    return flat
 
 
 def aggs_flat(
@@ -2688,12 +2713,13 @@ def aggs_flat(
             "envelope), not the flat bucket frame"
         )
     flat = _rollup_flat(docs, chain, metrics)
-    flat, _ = _truncate_terms(flat, chain, metrics, pins)
+    flat = _truncate_terms(flat, chain, metrics, pins)
     hidden = [
         c for ms in metrics.values() for m in ms if m.hidden
         for c in m.columns
-    ]
-    # the avg-merge companions are plumbing, not surface
+    ] + list(_level_totals(chain).values())
+    # the avg-merge companions and level totals are plumbing, not
+    # surface
     return flat.drop(*hidden) if hidden else flat
 
 
@@ -3042,26 +3068,15 @@ def aggs_nested(
         if b.name in auto_labels:
             b.auto_label = auto_labels[b.name]
     flat = _rollup_flat(docs, chain, metrics)
-    flat, others = _truncate_terms(flat, chain, metrics, pins)
+    flat = _truncate_terms(flat, chain, metrics, pins)
     rows = [r.asDict() for r in flat.limit(MAX_BUCKETS + 1).collect()]
     if len(rows) > MAX_BUCKETS:
         raise ValueError(
             f"aggregation produced more than {MAX_BUCKETS} buckets; "
             "narrow the query or raise the interval / lower terms sizes"
         )
-    other_maps: dict[int, dict[tuple, int]] = {}
-    for d, odf in others:
-        parent = [b.name for b in chain[: d - 1]]
-        # a depth-1 terms level has NO parent keys, so its others
-        # frame is a global aggregate — which emits ONE row with a
-        # NULL sum even when nothing was truncated (review finding:
-        # int(None) crashed the common nothing-truncated case)
-        other_maps[d] = {
-            tuple(_hashable(r[p]) for p in parent): int(r["sum_other"])
-            for r in (x.asDict() for x in odf.collect())
-            if r["sum_other"] is not None
-        }
     names = [b.name for b in chain]
+    totals = _level_totals(chain)
     # pre-group the bucket rows by (depth, parent-key prefix) ONCE:
     # the fold below visits every bucket, and a per-bucket filter of
     # the full row list is O(|rows|²) driver time — ~4×10⁹ tuple
@@ -3070,13 +3085,26 @@ def aggs_nested(
     # _hashable: an array-typed bucket field collects as a Python
     # list, which a dict key cannot hold (review finding — the
     # replaced equality filter compared lists fine).
+    # The same pass folds sum_other_doc_count: a parent row's level
+    # total minus the buckets kept under it (size-truncated and
+    # min_doc_count-pruned buckets alike count as other). A
+    # fabricated '__other__' row carries its level's total column
+    # and is not a kept bucket.
     by_parent: dict[tuple, list[dict]] = {}
+    other_maps: dict[int, dict[tuple, int]] = {}
+    for r in rows:
+        d = r["depth"]
+        if d + 1 in totals:
+            other_maps.setdefault(d + 1, {})[
+                tuple(_hashable(r[n]) for n in names[:d])
+            ] = r[totals[d + 1]]
     for r in rows:
         d = r["depth"]
         if d:
-            by_parent.setdefault(
-                (d, tuple(_hashable(r[n]) for n in names[: d - 1])), []
-            ).append(r)
+            prefix = tuple(_hashable(r[n]) for n in names[: d - 1])
+            by_parent.setdefault((d, prefix), []).append(r)
+            if d in totals and r[totals[d]] is None:
+                other_maps[d][prefix] -= r["doc_count"]
     th_maps: dict[str, dict[tuple, list[dict]]] = {}
     for d, nodes in tophits.items():
         kept = (

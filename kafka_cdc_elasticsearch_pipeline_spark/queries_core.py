@@ -1892,6 +1892,14 @@ def skew_salted_join_lineitem_supplier(spark: SparkSession, sf_dir: str) -> Data
 
 
 @query(
+    "lake_versioned_merge_latest",
+    _LATEST_SQL,
+    tags=("S2", "T5", "lake", "txnlog"),
+    # Benched so the txn-log merge commit carries a tracked number
+    # (r04 verdict #6).
+    bench=True,
+)
+@query(
     "lake_cdc_upsert_compaction", _LATEST_SQL, tags=("S2", "A3", "T5", "lake"), bench=True
 )
 def lake_cdc_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1902,7 +1910,12 @@ def lake_cdc_upsert_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to one latest-per-key pass over the full log — the
     associativity that lets a 100 TB lake ingest CDC incrementally
     and still equal the batch rebuild. Same oracle as the TABLE
-    materialization (s2_a3_table_latest_per_key)."""
+    materialization (s2_a3_table_latest_per_key).
+
+    Also registered as ``lake_versioned_merge_latest``, the name of
+    its former byte-identical twin: each batch is an atomic manifest
+    commit over immutable data files (versions 1..3), so a crash
+    mid-commit leaves the table at its previous version."""
     import tempfile
 
     from kafka_cdc_elasticsearch_pipeline_spark.sources import lakelog
@@ -2265,43 +2278,6 @@ def lake_cdc_deletes_tombstone_read(spark: SparkSession, sf_dir: str) -> DataFra
             .select(*EVENT_COLS)
             .localCheckpoint()
         )
-
-
-@query(
-    "lake_versioned_merge_latest",
-    _LATEST_SQL,
-    tags=("S2", "T5", "lake", "txnlog"),
-    # Benched so the txn-log merge commit carries a tracked number
-    # (r04 verdict #6).
-    bench=True,
-)
-def lake_versioned_merge_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The CDC MERGE as a transaction-log commit (sources/lakelog.py —
-    the Delta/Iceberg pattern on stdlib primitives): three change
-    batches become versions 1..3, each an atomic manifest commit over
-    immutable data files (a crash mid-commit leaves the table at its
-    previous version, never absent). Reading the latest version must
-    equal one latest-per-key pass over the whole changelog, same
-    oracle as lake_cdc_upsert_compaction."""
-    import tempfile
-
-    from kafka_cdc_elasticsearch_pipeline_spark.sources import lakelog
-
-    # spread=False: see lake_cdc_upsert_compaction — the batch feeds
-    # the merge's own hash exchange directly (r15: 1.76s → 1.01s).
-    ev = _events(spark, sf_dir, spread=False)
-    with tempfile.TemporaryDirectory(prefix="lake_log_") as tmp:
-        table = f"{tmp}/events_table"
-        for i in range(3):
-            lakelog.merge_apply_cdc(
-                spark,
-                table,
-                ev.filter(F.pmod(F.col("event_id"), F.lit(3)) == i),
-                ["user_id"],
-                "ts",
-                tiebreak="event_id",
-            )
-        return lakelog.read(spark, table).select(*EVENT_COLS).localCheckpoint()
 
 
 @query(

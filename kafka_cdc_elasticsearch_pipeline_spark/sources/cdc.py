@@ -16,17 +16,13 @@ Decode is pure Catalyst expressions (``from_json`` over a typed
 StructType) — JVM-side, codegen'd, no Python in the hot path. At
 100 TB of changelog this runs as a narrow map stage fused into the
 scan.
-
-The JDBC snapshot reader mirrors Debezium's initial-snapshot phase
-(readme.md:202-221): partitioned ``spark.read.jdbc`` bounded by the
-key range, then union with the change stream.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -172,35 +168,3 @@ def wrap_envelope(df: DataFrame, op: str = "c", db: str = "demo", table: str = "
         )
     )
     return df.select(value.alias("value"))
-
-
-def jdbc_snapshot(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    partition_column: str,
-    lower_bound: int,
-    upper_bound: int,
-    num_partitions: int = 32,
-    properties: dict | None = None,
-) -> DataFrame:
-    """S4 (snapshot phase) — partitioned JDBC read of the source table.
-
-    Range-partitioned on the primary key so the snapshot parallelizes
-    across executors instead of hammering one connection; this is the
-    Spark-idiomatic stand-in for Debezium's initial snapshot
-    (readme.md:202-221). Service-gated: requires a reachable database
-    and a JDBC driver on the classpath.
-    """
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("partitionColumn", partition_column)
-        .option("lowerBound", str(lower_bound))
-        .option("upperBound", str(upper_bound))
-        .option("numPartitions", str(num_partitions))
-    )
-    for k, v in (properties or {}).items():
-        reader = reader.option(k, v)
-    return reader.load()

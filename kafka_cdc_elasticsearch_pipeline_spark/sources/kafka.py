@@ -24,27 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def kafka_stream_reader(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "earliest",
-    **options,
-):
-    """S1 — ``CREATE STREAM ... WITH (KAFKA_TOPIC=...)``
-    (commands.sql:13). ``starting_offsets`` is R2 — ``SET
-    'auto.offset.reset'`` (ksqldb-statements.sql:49)."""
-    reader = (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader
-
-
 def avro_available(spark: SparkSession) -> bool:
     """True when the spark-avro data source is on the classpath (it is
     an external package: ``--packages org.apache.spark:spark-avro_*``).

@@ -125,3 +125,72 @@ def test_hot_keys_cache_hit_skips_rescan(spark, sf_dir):
     jobs_after = len(tracker.getJobIdsForGroup() or [])
     assert second == first
     assert jobs_after == jobs_before
+
+
+#: the dashboard's three tree panels, as Kibana's saved visualizations
+#: compile them, and a terms level with the Other bucket
+_PANELS = {
+    "median_by_status": {"k2": {
+        "date_histogram": {"field": "ts", "fixed_interval": "1d",
+                           "min_doc_count": 1},
+        "aggs": {"k3": {
+            "terms": {"field": "lang", "size": 5, "order": {"_key": "desc"}},
+            "aggs": {"k1": {"percentiles": {"field": "n_chars",
+                                            "percents": [50.0]}}},
+        }},
+    }},
+    "by_channel": {"k2": {
+        "date_histogram": {"field": "ts", "fixed_interval": "1d",
+                           "min_doc_count": 1},
+        "aggs": {"k3": {"terms": {"field": "lang", "size": 5,
+                                  "order": {"_count": "desc"}}}},
+    }},
+    "by_person": {"k2": {"terms": {"field": "doc_id", "size": 5,
+                                   "order": {"_count": "desc"}}}},
+    "terms_other": {"by_lang": {
+        "terms": {"field": "lang", "size": 1, "other_bucket": True},
+        "aggs": {"chars": {"sum": {"field": "n_chars"}}},
+    }},
+}
+
+
+def test_served_aggregation_leaves_storage_at_baseline(
+    spark, sf_dir, monkeypatch
+):
+    """A served tree pins its bucket frame for the request only: after
+    each /search the persistent-RDD count is back at its baseline, and
+    so it is after a registry-lifecycle ``aggs_flat`` once
+    ``release_pinned()`` ran. With pinning disabled nothing is
+    pinned at all."""
+    from kafka_cdc_elasticsearch_pipeline_spark.extensions import (
+        search_serve as serve,
+    )
+    from kafka_cdc_elasticsearch_pipeline_spark.extensions.search_rest import (
+        SearchRestServer,
+    )
+
+    meta = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.expr(
+            "timestamp'2024-01-01 00:00:00'"
+            " + make_interval(0, 0, 0, 0, doc_id % 72, 0, 0)"
+        ).alias("ts"),
+        "lang",
+        "n_chars",
+    )
+    server = SearchRestServer(spark, doc_source=meta)
+    caching.release_pinned()
+    before = _n_persistent(spark)
+    for name, spec in _PANELS.items():
+        out = server.search({"aggs": spec})
+        assert out["aggregations"], name
+        assert _n_persistent(spark) == before, name
+    serve.aggs_flat(meta, _PANELS["by_channel"]).collect()
+    assert caching._PINNED
+    caching.release_pinned()
+    assert _n_persistent(spark) == before
+    monkeypatch.setenv("SPARK_GRAFT_PIN_REUSED", "0")
+    pins: list = []
+    serve.aggregate(meta, _PANELS["terms_other"], pins)
+    assert pins == [] and caching._PINNED == []
+    assert _n_persistent(spark) == before

@@ -1185,6 +1185,11 @@ def test_match_all_validates_like_any_request(meta_server):
     for extra, msg in (
         ({"watermark": "bogus"}, "'watermark' must be"),
         ({"watermark": -3}, "'watermark' must be"),
+        # a JSON true is no watermark, and "pinned" takes a JSON
+        # boolean only ("false" is a truthy string)
+        ({"watermark": True}, "'watermark' must be"),
+        ({"pinned": "false"}, "'pinned' must be a boolean"),
+        ({"pinned": 1}, "'pinned' must be a boolean"),
         ({"pinned": True, "mode": "bm25"}, "'pinned' applies to"),
         ({"watermark": 3}, "no index version to pin"),
         ({"pinned": True}, "no index version to pin"),
@@ -1193,6 +1198,8 @@ def test_match_all_validates_like_any_request(meta_server):
             server.search({"aggs": aggs, **extra})
     with pytest.raises(ValueError, match="no index version to pin"):
         server.search({"sort": [{"field": "ts"}], "watermark": 3})
+    with pytest.raises(ValueError, match="'watermark' must be"):
+        server.search({"mode": "bm25", "query": "dup", "watermark": True})
 
 
 def test_served_shapes_count_passes(meta_server, monkeypatch):
