@@ -672,38 +672,6 @@ def pq_indexing_sink(
     return sink
 
 
-def hybrid_search_from_index(
-    spark: SparkSession,
-    index_root: str,
-    embeddings: DataFrame,
-    query_ids: tuple[int, ...] = (0, 1, 2),
-    pool: int = 20,
-    k: int = 10,
-) -> DataFrame:
-    """Retrieve-then-rerank SERVED FROM THE MAINTAINED INDEX — the
-    production form of ``similarity.hybrid_search_topk``: BM25
-    candidates come from the persisted tf/dl/df (no tokenization, no
-    corpus scan), the top-``pool`` per query are reranked by embedding
-    cosine, top-``k`` returned. Identical scores to the from-scratch
-    two-stage on the same snapshot (pinned in
-    tests/test_search_index.py); the expensive vector stage still
-    touches only pool × |queries| rows."""
-    from pyspark.sql import Window as W
-
-    scored = bm25_score_from_index(spark, index_root, query_ids)
-    w = W.partitionBy("query_id").orderBy(
-        F.col("bm25").desc(), F.col("doc_id").asc()
-    )
-    cand = (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= pool)
-        .select("query_id", "doc_id")
-    )
-    return sim._cosine_rerank_topk(
-        cand, embeddings, sim._query_embeddings(embeddings, query_ids), k
-    )
-
-
 def hybrid_search_index_only(
     spark: SparkSession,
     bm25_root: str,

@@ -1093,50 +1093,6 @@ def kmeans_refine(embeddings: DataFrame, iterations: int = 2) -> DataFrame:
     ).select("vec_id", F.col("label").alias("final_label"), "cosine")
 
 
-def kmeans_until_converged(
-    embeddings: DataFrame, max_iters: int = 10
-) -> tuple[DataFrame, int]:
-    """Lloyd's k-means run to a fixpoint: iterate (centroid recompute →
-    reassign) until no vector changes cluster, up to ``max_iters``.
-
-    The production-scale loop discipline (mirrors
-    ``dedup.connected_components``): each iteration's assignment is
-    persisted and the previous one unpersisted, so lineage stays one
-    iteration deep instead of re-deriving the whole history; the ONLY
-    driver-side data movement is the 1-row changed-count per iteration
-    (the convergence check — unavoidable in any iterate-until-done
-    distributed algorithm).
-
-    Returns (final (vec_id, embedding, label) assignment, iterations
-    actually run). The returned DataFrame is persisted; caller
-    unpersists when done.
-    """
-    assigned = embeddings.select("vec_id", "embedding", "label").persist()
-    assigned.count()
-    iters = 0
-    for _ in range(max_iters):
-        cents = centroids(assigned)
-        new_labels = assign_centroids(assigned, cents).select(
-            "vec_id", F.col("assigned_label").alias("label")
-        )
-        new_assigned = (
-            embeddings.select("vec_id", "embedding").join(new_labels, "vec_id").persist()
-        )
-        changed = (
-            new_assigned.join(
-                assigned.select("vec_id", F.col("label").alias("_old")), "vec_id"
-            )
-            .filter(F.col("label") != F.col("_old"))
-            .count()
-        )
-        assigned.unpersist()
-        assigned = new_assigned
-        iters += 1
-        if changed == 0:
-            break
-    return assigned, iters
-
-
 def _query_embeddings(embeddings, query_ids):
     """(query_id, q_embedding) rows for the query batch — broadcast by
     every caller (queries are few)."""

@@ -17,6 +17,14 @@ Endpoints (subset the reference exercises):
 - ``GET /info``    liveness probe (the reference's wait loops curl it,
   readme.md:18-25).
 
+A pull query over a TABLE reads the state the engine stored at CREATE
+(see ``translate``'s execution model) and scans no source: the
+``toLocalIterator`` below runs one Spark job per stored partition, and
+a small TABLE is stored as one. A statement the caller got wrong (a
+``ValueError``/``KeyError`` from the translator, Spark's
+``AnalysisException``/``ParseException``) answers 400; any other
+failure answers 500, both with the ``statement_error`` body.
+
 Scale note: this is a CONTROL-plane shim — results stream through the
 driver, so it is for pull queries / DDL / inspection, exactly like
 ksqlDB's own REST query endpoint (which also funnels through the
@@ -29,10 +37,16 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from pyspark.errors import AnalysisException
+
 from kafka_cdc_elasticsearch_pipeline_spark.ksql.translate import (
     KsqlEngine,
     split_statements,
 )
+
+#: exceptions that mean the statement is at fault (400), not the server;
+#: Spark's ParseException is an AnalysisException
+CALLER_FAULTS = (ValueError, KeyError, AnalysisException)
 
 
 class KsqlRestServer:
@@ -154,7 +168,8 @@ class KsqlRestServer:
                         self.close_connection = True
                     else:
                         self._json(
-                            400, {"@type": "statement_error", "message": str(exc)}
+                            400 if isinstance(exc, CALLER_FAULTS) else 500,
+                            {"@type": "statement_error", "message": str(exc)},
                         )
 
         self._httpd = ThreadingHTTPServer((host, port), Handler)

@@ -33,21 +33,33 @@ Kafka topic, decoded, carrying an event-time ``ROWTIME`` column and
 optionally ``KAFKA_KEY``/``KAFKA_OFFSET`` metadata). Every derived
 relation registers as a temp view, so statements compose exactly like
 ksqlDB's catalog. ``SELECT *`` expands to data columns (metadata
-columns stay hidden, matching ksqlDB).
+columns stay hidden, matching ksqlDB). A TABLE holds state: its plan
+(the latest-per-key reduce of ``CREATE TABLE … PRIMARY KEY``, or the
+query of ``CREATE TABLE … AS SELECT``) runs once at CREATE and the
+relation reads the stored result (``operators.caching.materialize``),
+the way ksqlDB's pull queries read a state store — a pull is a filter
+over that state and reads no source. STREAMs stay lazy plans.
+``DROP`` and a re-CREATE of the same name free a TABLE's state; like
+ksqlDB, neither applies to a relation that another one reads from.
 
 Deviations (documented, deliberate): WINDOWSTART is a TIMESTAMP (not
 epoch-ms BIGINT) — string predicates like ``WINDOWSTART > '2020-07-06
 T15:30:00'`` still work via Spark's literal coercion; ``EMIT CHANGES``
-semantics are the batch fixpoint.
+semantics are the batch fixpoint; ``INSERT INTO`` a stream does not
+reach a TABLE created from it earlier — the TABLE keeps the answer of
+its CREATE, where ksqlDB's persistent query would fold the new rows in.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
+import threading
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from kafka_cdc_elasticsearch_pipeline_spark.operators import caching
 
 META_COLS = ("rowtime", "kafka_key", "kafka_offset")
 
@@ -181,6 +193,8 @@ class Relation:
     key_col: str | None = None
     sink_topic: str | None = None
     data_cols: list[str] = field(default_factory=list)
+    #: registered relations its plan reads (lower-case names)
+    sources: tuple[str, ...] = ()
 
 
 @dataclass
@@ -205,6 +219,8 @@ class KsqlEngine:
         self.relations: dict[str, Relation] = {}
         self.properties: dict[str, str] = {}
         self.connectors: dict[str, Connector] = {}
+        # serializes catalog changes (the REST server is threaded)
+        self._catalog_lock = threading.Lock()
 
     # -- public ----------------------------------------------------------
 
@@ -245,18 +261,22 @@ class KsqlEngine:
             merged = target.df.unionByName(
                 extra.select(*target.df.columns), allowMissingColumns=False
             )
-            self._register(
-                Relation(
-                    target.name, merged, target.kind, target.key_col,
-                    target.sink_topic, target.data_cols,
+            with self._catalog_lock:
+                self._register(
+                    replace(
+                        target, df=merged,
+                        sources=target.sources + self._reads(im.group(2)),
+                    )
                 )
-            )
             return None
         dm = re.match(r"DROP\s+(STREAM|TABLE)\s+(?:IF\s+EXISTS\s+)?(\w+)", s, re.IGNORECASE)
         if dm:
-            rel = self.relations.pop(dm.group(2).lower(), None)
-            if rel is not None:
-                self.spark.catalog.dropTempView(rel.name)
+            with self._catalog_lock:
+                old = self._droppable(dm.group(2))
+                if old is not None:
+                    del self.relations[old.name.lower()]
+                    self.spark.catalog.dropTempView(old.name)
+                    self._free(old)
             return None
         if u.startswith("TERMINATE"):
             return None  # batch mode has no continuous queries to stop
@@ -385,6 +405,44 @@ class KsqlEngine:
         self.relations[rel.name.lower()] = rel
         rel.df.createOrReplaceTempView(rel.name)
 
+    def _create(self, rel: Relation) -> None:
+        """Register a CREATEd relation in place of any of the same name;
+        a TABLE's plan runs here, once, and the relation reads its
+        stored result."""
+        with self._catalog_lock:
+            old = self._droppable(rel.name, rel)
+            if rel.kind == "table":
+                rel.df = caching.materialize(rel.df)
+            self._register(rel)
+            if old is not None:
+                self._free(old)
+
+    def _droppable(self, name: str, new: Relation | None = None) -> Relation | None:
+        """The relation registered as ``name``, if any, once checked free
+        to go. As in ksqlDB, a relation that another one (or ``new``, the
+        one replacing it) reads from stays: its readers would fail on
+        freed state."""
+        key = name.lower()
+        rel = self.relations.get(key)
+        readers = [r.name for r in (*self.relations.values(), new)
+                   if r is not None and r is not rel and key in r.sources]
+        if rel is not None and readers:
+            raise ValueError(
+                f"cannot drop {rel.name}: {', '.join(readers)} read from it"
+            )
+        return rel
+
+    @staticmethod
+    def _free(rel: Relation) -> None:
+        """Free the stored state of an unregistered TABLE."""
+        if rel.kind == "table":
+            caching.release(rel.df)
+
+    def _reads(self, select: str) -> tuple[str, ...]:
+        """The registered relations a SELECT names after FROM or JOIN."""
+        names = re.findall(r"\b(?:FROM|JOIN)\s+(\w+)", select, re.IGNORECASE)
+        return tuple(n.lower() for n in names if n.lower() in self.relations)
+
     def _create_source(self, s: str) -> None:
         m = re.match(
             r"CREATE\s+(STREAM|TABLE)\s+(\w+)\s*(\(([^)]*)\))?\s*WITH",
@@ -426,7 +484,7 @@ class KsqlEngine:
             df = latest_per_key(df, [key_col], "rowtime", tiebreak=tiebreak)
 
         data_cols = [c for c in df.columns if c.lower() not in META_COLS]
-        self._register(Relation(name, df, kind, key_col, None, data_cols))
+        self._create(Relation(name, df, kind, key_col, None, data_cols))
 
     def _data_cols(self, name: str) -> list[str] | None:
         rel = self.relations.get(name.lower())
@@ -461,9 +519,10 @@ class KsqlEngine:
             key_col=part_col,
             sink_topic=props.get("KAFKA_TOPIC", name),
             data_cols=list(df.columns),
+            sources=self._reads(select),
         )
-        self._register(rel)
-        return df
+        self._create(rel)
+        return rel.df
 
     def _select(self, s: str) -> DataFrame:
         df, _ = self._run_select(s)

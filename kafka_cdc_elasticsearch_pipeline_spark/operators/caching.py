@@ -27,7 +27,8 @@ ContextCleaner also reclaims pins once the result DataFrame is
 garbage-collected).
 
 Set ``SPARK_GRAFT_PIN_REUSED=0`` to disable pinning entirely
-(memory-constrained sessions; trades the double computation back).
+(memory-constrained sessions; trades the double computation back);
+``materialize()`` then stores nothing either.
 """
 
 from __future__ import annotations
@@ -109,6 +110,34 @@ def pin(df: DataFrame, pins: list[DataFrame] | None = None) -> DataFrame:
     return DataFrame(
         ds.ofRows(jss, fresh.queryExecution().withCachedData()), session
     )
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Run ``df``'s plan once and return a frame over the stored result,
+    for a relation read many times after it is built (a ksqlDB TABLE's
+    state store).
+
+    The result keeps the partitioning the executed plan gave it (AQE
+    coalesces a small aggregate to one partition), so a later filter
+    over it is one job with a task per stored partition and reads no
+    source file. ``persist`` would keep the plan's shuffle partitions
+    and its stages. The caller owns the state: ``release()`` frees it,
+    and Spark's ContextCleaner reclaims it once the frame is garbage-
+    collected. A frame reading the state after its release fails
+    rather than recompute. With pinning disabled, ``df`` comes back
+    as is."""
+    if not pinning_enabled():
+        return df
+    return df.localCheckpoint(eager=True)
+
+
+def release(df: DataFrame) -> None:
+    """Free the state a ``materialize()``d frame reads: the stored RDD
+    its plan is a bare scan of. A frame with any other plan is left
+    alone."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def release_pinned() -> int:

@@ -1,10 +1,10 @@
-"""Kafka source/sink builders (SURVEY §2.1 S1/S8, §2.7 R2).
+"""Kafka value decoding (SURVEY §2.1 S1, §2.7 R2).
 
-CI has no broker, so these builders *construct* fully configured
-streaming readers/writers; nothing talks to Kafka until ``.load()`` /
-``.start()``. The deterministic replay path (``streaming.replay``)
-stands in for the broker in tests — downstream semantics are
-identical by Structured Streaming's source-agnostic design.
+The dataflow reads its topics through the deterministic replay path
+(``streaming.replay``), which stands in for the broker — downstream
+semantics are identical by Structured Streaming's source-agnostic
+design. This module decodes the Kafka ``value`` column of such a
+frame, or of a real ``readStream.format("kafka")`` one.
 
 Value decoding: the reference's topics are Avro-with-registry
 (docker-compose.yml:59-72). Spark's ``from_avro`` needs the
@@ -80,37 +80,6 @@ def decode_value(
         F.col("timestamp").alias("rowtime"),
         F.col("_v.*"),
     )
-
-
-def kafka_sink_writer(
-    df: DataFrame,
-    bootstrap_servers: str,
-    topic: str,
-    key_col: str | None = None,
-    checkpoint_dir: str | None = None,
-):
-    """S8 — every CSAS/CTAS writes a derived topic
-    (``WITH (KAFKA_TOPIC='ratings-enriched')``, ksqldb-statements.sql:50-51).
-    ``key_col`` implements PARTITION BY's message-key rewrite (R1):
-    Kafka hashes the key to a partition, so setting the key IS the
-    repartitioning."""
-    key = (
-        F.col(key_col).cast("string").alias("key")
-        if key_col
-        else F.lit(None).cast("string").alias("key")
-    )
-    payload = df.select(
-        key,
-        F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"),
-    )
-    writer = (
-        payload.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-    )
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer
 
 
 def decode_value_tolerant(

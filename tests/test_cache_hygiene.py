@@ -194,3 +194,37 @@ def test_served_aggregation_leaves_storage_at_baseline(
     serve.aggregate(meta, _PANELS["terms_other"], pins)
     assert pins == [] and caching._PINNED == []
     assert _n_persistent(spark) == before
+
+
+def test_ksql_table_state_is_freed_by_drop_and_replace(spark, monkeypatch):
+    """A TABLE stores its state at CREATE; DROP and a re-CREATE of the
+    same name free the old state, so after CREATE → pull → re-CREATE →
+    DROP the persistent-RDD count is back at its baseline. With pinning
+    disabled, tables stay lazy and store nothing."""
+    import datetime
+
+    from kafka_cdc_elasticsearch_pipeline_spark.ksql import KsqlEngine
+
+    reviews = spark.createDataFrame(
+        [(i % 3, datetime.datetime(2021, 3, 1, 9, 0)
+          + datetime.timedelta(minutes=7 * i)) for i in range(30)],
+        "member_id int, rowtime timestamp",
+    )
+    ctas = ("CREATE TABLE PER_MEMBER AS SELECT MEMBER_ID, COUNT(*) AS N"
+            " FROM REVIEWS WINDOW TUMBLING (SIZE 15 MINUTE) GROUP BY MEMBER_ID")
+    engine = KsqlEngine(spark, {"reviews": reviews})
+    engine.execute("CREATE STREAM REVIEWS WITH (KAFKA_TOPIC='reviews')")
+    before = _n_persistent(spark)
+    engine.execute(ctas)
+    assert _n_persistent(spark) == before + 1
+    assert engine.execute("SELECT N FROM PER_MEMBER WHERE MEMBER_ID = 1").count()
+    engine.execute(ctas)  # replaces: the first state goes
+    assert _n_persistent(spark) == before + 1
+    engine.execute("DROP TABLE PER_MEMBER")
+    assert _n_persistent(spark) == before
+
+    monkeypatch.setenv("SPARK_GRAFT_PIN_REUSED", "0")
+    engine.execute(ctas)
+    assert _n_persistent(spark) == before
+    assert engine.execute("SELECT N FROM PER_MEMBER WHERE MEMBER_ID = 1").count()
+    engine.execute("DROP TABLE PER_MEMBER")

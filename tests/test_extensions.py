@@ -572,21 +572,6 @@ def test_tfidf_rare_term_outranks_common(spark):
     assert doc1.term == "zebra" and doc1.tfidf == 6.0
 
 
-def test_kmeans_until_converged_reaches_fixpoint(spark, vectors):
-    final, iters = sim.kmeans_until_converged(vectors, max_iters=10)
-    assert 1 <= iters <= 10
-    labels = {r.vec_id: r.label for r in final.collect()}
-    # 0 and 1 point the same direction -> same cluster; 3 is 0 negated
-    # -> cannot share 0's cluster at the fixpoint
-    assert labels[0] == labels[1]
-    assert labels[3] != labels[0]
-    # fixpoint: one more assignment step changes nothing
-    again = sim.assign_centroids(final, sim.centroids(final))
-    moved = again.filter(F.col("true_label") != F.col("assigned_label")).count()
-    assert moved == 0
-    final.unpersist()
-
-
 def test_simhash_arrow_equals_catalyst_spec(spark, docs):
     """The Arrow-vectorized simhash (hot path) must produce the exact
     integer signature of the Catalyst expression in textops.simhash60

@@ -621,42 +621,6 @@ def test_pq_indexing_sink_redelivery_is_noop(spark, sf_dir, tmp_path):
     assert lakelog.read(spark, pq_codes).count() == n
 
 
-def test_hybrid_search_from_index_matches_from_scratch(spark, sf_dir, tmp_path):
-    """Serving parity: hybrid retrieve-then-rerank FROM the maintained
-    index must equal the same two-stage built from scratch on the same
-    snapshot (BM25 candidates -> top-pool -> cosine rerank)."""
-    from pyspark.sql import Window as W
-
-    source = str(tmp_path / "docs")
-    index = str(tmp_path / "idx")
-    docs, chunks = _doc_chunks(spark, sf_dir)
-    for chunk in chunks:
-        lakelog.append_commit(spark, source, chunk)
-        si.bm25_index_maintain(spark, source, index)
-
-    embs = load_table(spark, sf_dir, "embeddings")
-    qids, pool, k = (0, 1, 2), 20, 10
-    got = si.hybrid_search_from_index(
-        spark, index, embs, query_ids=qids, pool=pool, k=k
-    ).collect()
-
-    w = W.partitionBy("query_id").orderBy(
-        F.col("bm25").desc(), F.col("doc_id").asc()
-    )
-    cand = (
-        sim.bm25_scored_candidates(docs, qids)
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") <= pool)
-        .select("query_id", "doc_id")
-    )
-    want = sim._cosine_rerank_topk(
-        cand, embs, sim._query_embeddings(embs, qids), k
-    ).collect()
-    g = sorted((r.query_id, r.doc_id, r.cosine, r.rank) for r in got)
-    assert g == sorted((r.query_id, r.doc_id, r.cosine, r.rank) for r in want)
-    assert len(g) == len(qids) * k
-
-
 # --- IVF-PQ deletes / CDC maintenance (merge-on-read tombstones) -------------
 
 
