@@ -494,13 +494,13 @@ class SearchRestServer:
         ``hits.total`` rule, one ``fill``, one ``took`` stamp and one
         envelope.
 
-        Per-request pin lifecycle around :meth:`_search`: frames a
-        request references twice (the bm25 match set feeding both hits
-        and aggs; the aggs bucket frame across truncation branches)
-        are persisted for the request and ALWAYS unpersisted here —
-        the registry-lifecycle ``reuse()`` list must not be used from
-        a threaded long-running server (nothing would release it, and
-        concurrent requests would release each other's pins)."""
+        Per-request pin lifecycle around :meth:`_search`: a frame the
+        request references twice (the bm25 match set feeding the hits,
+        the match count and the aggs) is persisted for the request and
+        ALWAYS unpersisted here — the registry-lifecycle ``reuse()``
+        list must not be used from a threaded long-running server
+        (nothing would release it, and concurrent requests would
+        release each other's pins)."""
         pins: list[DataFrame] = []
         try:
             return self._search(req, pins)
@@ -646,9 +646,12 @@ class SearchRestServer:
             match set (deep sorted pages reach docs relevance would
             never nominate); the vector modes pass their retrieved
             top-k_page frame (ES kNN+sort re-orders within the k
-            retrieved)."""
+            retrieved). match_all's frame already carries its sort
+            keys; the others join them in."""
             if sort_spec is None:
                 return df
+            if match_all:
+                return serve.sort_rank(df, sort_spec, k_page, id_col="_id")
             return serve.sorted_rank(
                 df.drop("rank") if "rank" in df.columns else df,
                 self.doc_source, sort_spec, k_page, id_col="_id",
@@ -783,6 +786,7 @@ class SearchRestServer:
                     F.col("doc_id").alias("_id"),
                     # ES serves _score null on sorted match_all
                     F.lit(None).cast("double").alias("_score"),
+                    *serve.sort_keys(sort_spec),
                 )
         elif mode == "bm25":
             if self.bm25_root is None:
@@ -1047,9 +1051,7 @@ class SearchRestServer:
                     "doc_id",
                     "left_semi",
                 )
-            aggregations, agg_total = serve.aggregate(
-                matched, aggs_spec, pins
-            )
+            aggregations, agg_total = serve.aggregate(matched, aggs_spec)
         # hits.total (round-12 advice #3): match_all and bm25 serve the
         # MATCH-SET size — ES's total, identical on every page, what a
         # saved-search consumer sizes its pager from — read free from

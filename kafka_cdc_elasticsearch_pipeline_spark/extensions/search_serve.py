@@ -29,9 +29,10 @@ REST face (``search_rest.py``) those two missing consumer surfaces:
   response envelope (``buckets``/``key``/``key_as_string``/
   ``doc_count``/``sum_other_doc_count``) driver-side — bucket-count
   work, capped at ES's own ``search.max_buckets`` default.
-- :func:`sorted_rank` re-ranks a serve by document metadata fields
-  (ES ``sort``), composing with the absolute-rank ``from`` pagination:
-  the rank window simply orders by the sort keys instead of the score.
+- :func:`sort_rank` ranks a serve by document metadata fields (ES
+  ``sort``), composing with the absolute-rank ``from`` pagination:
+  the rank window simply orders by the sort keys instead of the
+  score; :func:`sorted_rank` joins the keys onto a scored serve first.
 - ``top_hits`` (envelope-only): example documents per bucket — the
   Kibana data-table primitive — as ONE window pass over the matched
   docs, semi-joined to the post-truncation kept buckets first so
@@ -1109,25 +1110,26 @@ class _Metric:
         # envelope or the flat gate surface
         self.hidden = False
 
-    def merge_exprs(self) -> list[Column]:
+    def merge_exprs(self) -> dict[str, Column]:
         """Re-aggregate this metric ACROSS flat bucket rows — the
         ``__other__`` bucket merge, which must stay bucket-frame-
-        sized (never a corpus re-scan). Only metric states whose
-        flat columns are mergeable qualify: sum/min/max/value_count
-        directly, stats componentwise (avg = sum/count), avg via its
-        hidden sum+count companions; parse_aggs 400s percentiles/
-        cardinality under an other_bucket level."""
+        sized (never a corpus re-scan): each flat column → its merge
+        expression. Only metric states whose flat columns are
+        mergeable qualify: sum/min/max/value_count directly, stats
+        componentwise (avg = sum/count), avg via its hidden sum+count
+        companions; parse_aggs 400s percentiles/cardinality under an
+        other_bucket level."""
         if self.typ == "value_count":
-            return [F.sum(self.name).cast("bigint").alias(self.name)]
+            return {self.name: F.sum(self.name).cast("bigint")}
         if self.typ == "stats":
             cnt, mn, mx, avg, sm = self.columns
-            return [
-                F.sum(cnt).cast("bigint").alias(cnt),
-                F.min(mn).alias(mn),
-                F.max(mx).alias(mx),
-                (F.sum(sm) / F.sum(cnt)).alias(avg),
-                F.sum(sm).alias(sm),
-            ]
+            return {
+                cnt: F.sum(cnt).cast("bigint"),
+                mn: F.min(mn),
+                mx: F.max(mx),
+                avg: F.sum(sm) / F.sum(cnt),
+                sm: F.sum(sm),
+            }
         if self.typ == "extended_stats":
             # count/sum/sum_of_squares merge additively; avg/variance/
             # std recompute from the merged sums — the same exact-
@@ -1142,25 +1144,23 @@ class _Metric:
                     F.lit(0.0),
                 ),
             )
-            return [
-                mcnt.cast("bigint").alias(cnt),
-                F.min(mn).alias(mn),
-                F.max(mx).alias(mx),
-                (msm / mcnt).alias(avg),
-                msm.alias(sm),
-                msos.alias(sos),
-                mvar.alias(var),
-                F.sqrt(mvar).alias(std),
-            ]
+            return {
+                cnt: mcnt.cast("bigint"),
+                mn: F.min(mn),
+                mx: F.max(mx),
+                avg: msm / mcnt,
+                sm: msm,
+                sos: msos,
+                var: mvar,
+                std: F.sqrt(mvar),
+            }
         if self.typ == "avg":
-            return [
-                (
-                    F.sum(f"{self.name}__obs")
-                    / F.sum(f"{self.name}__obn")
-                ).alias(self.name)
-            ]
+            return {
+                self.name: F.sum(f"{self.name}__obs")
+                / F.sum(f"{self.name}__obn")
+            }
         fn = {"sum": F.sum, "min": F.min, "max": F.max}[self.typ]
-        return [fn(self.name).alias(self.name)]
+        return {self.name: fn(self.name)}
 
     def exprs(
         self, c: Column | None = None, prefix: str = ""
@@ -2199,7 +2199,7 @@ def parse_aggs(spec: dict, columns: list[str]) -> tuple[
                 walk(child_aggs, depth + 1)
 
     walk(spec, 0)
-    reserved = {"depth", "doc_count"}
+    reserved = {"depth", "doc_count", *_TRUNC_COLS}
     for b in chain:
         if b.name in reserved:
             raise ValueError(f"agg name {b.name!r} is reserved")
@@ -2496,186 +2496,166 @@ def _metric_cols(metrics: dict[int, list[_Metric]]) -> list[str]:
     return [c for ms in metrics.values() for m in ms for c in m.columns]
 
 
-def _terms_order_cols(b: _Bucket) -> list[Column]:
+#: the truncation's scratch columns (reserved agg names)
+_TRUNC_COLS = ("_rank", "_count", "_metric", "_kept")
+
+
+def _terms_order_cols(
+    b: _Bucket, count: Column, metric: Column | None
+) -> list[Column]:
     """The truncation-window sort for one terms level: ES's default
-    (doc_count desc, key asc) or the bucket's explicit ``order``.
+    (doc_count desc, key asc) or the bucket's explicit ``order``,
+    over ``count``/``metric`` — the level's doc_count and order
+    metric, or their copies on the bucket's descendants.
     Key order needs no tiebreak (keys are unique per parent);
     doc_count and metric orders tiebreak key asc (ES); a NULL metric
     (bucket with no values for the field) sorts LAST either
     direction — the bucket can't compete on a value it doesn't
     have."""
+    kc = F.col(b.name)
     if b.order_key == "_key":
-        kc = F.col(b.name)
         return [kc.asc() if b.order_asc else kc.desc()]
     if b.order_key == "_count":
-        cc = F.col("doc_count")
-        return [cc.asc() if b.order_asc else cc.desc(), F.col(b.name).asc()]
-    mc = F.col(b.order_col)
+        return [count.asc() if b.order_asc else count.desc(), kc.asc()]
     return [
-        mc.asc_nulls_last() if b.order_asc else mc.desc_nulls_last(),
-        F.col(b.name).asc(),
+        metric.asc_nulls_last() if b.order_asc else metric.desc_nulls_last(),
+        kc.asc(),
     ]
 
 
 def _truncate_terms(
     flat: DataFrame,
     chain: list[_Bucket],
-    metrics: dict[int, list[_Metric]] | None = None,
-    pins: list[DataFrame] | None = None,
+    metrics: dict[int, list[_Metric]],
 ) -> DataFrame:
-    """Apply each terms level's ``size`` (top-N per parent by
-    doc_count desc, key asc — ES's default order) on the BUCKET frame,
-    pruning deeper rows to kept parents. ``sum_other_doc_count`` needs
-    no frame of its own: the parent rows carry each terms level's
-    total (:func:`_rollup_flat`), and the envelope subtracts the kept
-    buckets.
+    """Apply each terms level's ``min_doc_count`` and ``size`` (top-N
+    per parent in the level's order) on the BUCKET frame, pruning
+    deeper rows to kept parents, as ONE linear plan: windows and
+    filters, no self-join, no union, nothing persisted.
+    ``sum_other_doc_count`` needs no frame of its own: the parent rows
+    carry each level's total (:func:`_rollup_flat`), and the envelope
+    subtracts the kept buckets. Per terms level d, in chain order:
 
-    The keep-list window, the semi-join, the union and the
-    ``other_bucket`` merges all reference the rollup frame, and Spark
-    recomputes a subtree per reference — for this frame that means
-    re-running the WHOLE match-set rollup (scan included) once per
-    reference. ``caching.pin`` persists it once and returns a frame
-    rooted on the cached relation, so every branch reads that one
-    materialization. (A plain ``persist()`` is not enough on Spark
-    4.1.2: ``DeduplicateRelations`` re-instances the rollup's
-    ``Expand`` in each further reference, that reference no longer
-    matches the cached plan, and it re-scans the docs — a warm
-    dashboard panel ran its rollup four times.) The rollup output is
-    bucket-count-sized, so the pin is small.
-
-    Pin lifecycle: with ``pins=None`` the pin goes through ``reuse()``
-    — the registry lifecycle (gate rows, batch pipelines) releases it
-    when the next query starts. A long-running THREADED server must
-    NOT use that global list (nothing ever releases it there, and
-    concurrent requests would release each other's pins), so the REST
-    layer passes a per-request ``pins`` list and unpersists in its
-    own ``finally``."""
-    if any(b.typ in ("terms", "multi_terms") for b in chain):
-        from kafka_cdc_elasticsearch_pipeline_spark.operators import caching
-
-        flat = caching.pin(flat, pins)
+    - a non-leaf level copies its bucket's order values onto the
+      bucket's descendants (``max(when(depth == d, c))`` over the
+      bucket's keys); a leaf level's rows are the buckets themselves.
+    - ``min_doc_count`` filters on the (copied) doc_count.
+    - ``dense_rank`` over (parent keys, depth ≥ d), ordered by the
+      level's order then its key, gives every row at depth ≥ d its
+      level-d bucket's rank; rows above d tie at rank 1 in partitions
+      of their own. Filtering ``rank <= size`` keeps Spark's
+      WindowGroupLimit (Partial below the exchange, then Final), so a
+      depth-1 level over a high-cardinality field ships about
+      size × partitions rows to its single-partition rank.
+    - ``other_bucket`` keeps the rank unfiltered and folds the
+      non-kept rows into ``'__other__'`` (:func:`_fold_other`); deeper
+      terms levels then truncate the merged rows per parent."""
     names = [b.name for b in chain]
     totals = _level_totals(chain)
+    depth = F.col("depth")
     for d, b in enumerate(chain, start=1):
         if b.typ not in ("terms", "multi_terms"):
             continue
-        lvl = flat.filter(F.col("depth") == d)
+        metric = F.col(b.order_col) if b.order_col else None
+        count = F.col("doc_count")
+        if d < len(names):
+            # the level-d bucket's order values onto its descendants
+            up = Window.partitionBy(*names[:d])
+            flat = flat.withColumn(
+                "_count", F.max(F.when(depth == d, count)).over(up)
+            )
+            count = F.col("_count")
+            if metric is not None:
+                flat = flat.withColumn(
+                    "_metric", F.max(F.when(depth == d, metric)).over(up)
+                )
+                metric = F.col("_metric")
+        order = _terms_order_cols(b, count, metric)
         # ES terms min_doc_count: buckets under the threshold are
-        # pruned BEFORE size selection (ES's reduce order)
-        cand = (
-            lvl.filter(F.col("doc_count") >= b.min_doc_count)
-            if b.min_doc_count > 1
-            else lvl
-        )
-        # depth 1 has NO parent keys, so this window runs on a single
-        # partition (Spark warns "No Partition Defined") — intended:
-        # the input is the BUCKET frame (≤ MAX_BUCKETS rows by the
-        # serve contract), never the corpus, so one task ranking it
-        # is the cheap direction; deeper levels partition by parents.
-        w = Window.partitionBy(*names[: d - 1]).orderBy(
-            *_terms_order_cols(b)
-        )
-        ranked = cand.withColumn("_rn", F.row_number().over(w))
-        keep = ranked.filter(F.col("_rn") <= b.size).select(*names[:d])
-        pruned = flat.filter(F.col("depth") < d).unionByName(
-            flat.filter(F.col("depth") >= d).join(keep, names[:d], "left_semi")
-        )
-        if b.other_bucket:
-            # Kibana's "group remaining as Other", ONE extra pass over
-            # the BUCKET frame (never the corpus): anti-join the
-            # level's rows against the keep-list, merge doc_count and
-            # every mergeable metric per parent, and union the result
-            # back as an explicit depth-d '__other__' row. The frame
-            # is already pinned (the terms-pin above), so the extra
-            # reference reads the pin, not a rollup re-run.
-            from pyspark.sql import types as T
-
-            if not isinstance(flat.schema[b.name].dataType, T.StringType):
-                raise ValueError(
-                    f"terms agg {b.name!r}: other_bucket needs a "
-                    "string-keyed field (the '__other__' sentinel is "
-                    "a string)"
-                )
-            # merge THIS level and every deeper one: the __other__
-            # bucket carries its own sub-chain (the Kibana
-            # terms-split × date-axis shape — review finding: a
-            # depth-d-only merge served __other__ with silently
-            # EMPTY children). Each deeper level d2 groups the
-            # anti-joined depth-d2 rows by (parents, deeper keys)
-            # with the level-d key replaced by the sentinel — still
-            # bucket-frame passes; deeper terms levels truncate the
-            # merged rows per-parent in their own loop iterations.
-            for d2 in range(d, len(names) + 1):
-                # hidden companions (an avg's __obs/__obn) merge TOO:
-                # a later stacked other_bucket level re-aggregates
-                # the fabricated rows, and summing NULLed companions
-                # would serve a NULL avg for __other__-under-
-                # __other__ (review finding) — sum/count states are
-                # mergeable, so carry them through
-                lvl_metrics = list((metrics or {}).get(d2, []))
-                merge_aggs = [
-                    F.sum("doc_count").cast("bigint").alias("doc_count")
-                ]
-                for m in lvl_metrics:
-                    merge_aggs.extend(m.merge_exprs())
-                # the next terms level's total merges too: it is that
-                # level's sum_other base under the merged bucket
-                below = [totals[d2 + 1]] if d2 + 1 in totals else []
-                merge_aggs.extend(
-                    F.sum(c).cast("bigint").alias(c) for c in below
-                )
-                group_keys = names[: d - 1] + names[d:d2]
-                grp = (
-                    flat.filter(F.col("depth") == d2)
-                    .join(keep, names[:d], "left_anti")
-                    .groupBy(*group_keys)
-                    .agg(*merge_aggs)
-                )
-                merged_cols = {"doc_count", *below} | {
-                    c for m in lvl_metrics for c in m.columns
-                }
-                sel: list[Column] = []
-                for fld in flat.schema.fields:
-                    if fld.name == "depth":
-                        sel.append(
-                            F.lit(d2).cast(fld.dataType).alias("depth")
-                        )
-                    elif fld.name == b.name:
-                        sel.append(
-                            F.lit("__other__").cast(fld.dataType)
-                            .alias(fld.name)
-                        )
-                    elif d2 == d and fld.name == totals[d]:
-                        # marks the fabricated row: its level's
-                        # total is otherwise NULL at this depth, so
-                        # the envelope never counts it as kept
-                        sel.append(F.col("doc_count").alias(fld.name))
-                    elif (
-                        fld.name in group_keys
-                        or fld.name in merged_cols
-                    ):
-                        sel.append(
-                            F.col(fld.name).cast(fld.dataType)
-                            .alias(fld.name)
-                        )
-                    else:
-                        sel.append(
-                            F.lit(None).cast(fld.dataType)
-                            .alias(fld.name)
-                        )
-                pruned = pruned.unionByName(
-                    # the nothing-truncated case: a parentless
-                    # level's global agg still emits one row (NULL
-                    # sum) — drop it
-                    grp.select(*sel).filter(F.col("doc_count") > 0)
-                )
-        flat = pruned
+        # pruned BEFORE size selection (ES's reduce order); under
+        # other_bucket they rank after every passing bucket and merge
+        # into __other__ with the size-truncated ones
+        passes = (depth < d) | (count >= b.min_doc_count)
+        if b.min_doc_count > 1 and not b.other_bucket:
+            flat = flat.filter(passes)
+        elif b.min_doc_count > 1:
+            order = [passes.desc(), *order]
+        # depth 1 has NO parent keys, so the level's rows rank in one
+        # partition — intended: the input is the BUCKET frame (≤
+        # MAX_BUCKETS rows by the serve contract), and the
+        # WindowGroupLimit bounds what reaches it
+        w = Window.partitionBy(*names[: d - 1], depth >= d).orderBy(*order)
+        flat = flat.withColumn("_rank", F.dense_rank().over(w))
+        if not b.other_bucket:
+            flat = flat.filter(F.col("_rank") <= b.size)
+        else:
+            flat = _fold_other(flat, b, d, names, totals, metrics, passes)
+        flat = flat.drop(*_TRUNC_COLS)
     return flat
 
 
-def aggs_flat(
-    docs: DataFrame, spec: dict, pins: list[DataFrame] | None = None
+def _fold_other(
+    flat: DataFrame,
+    b: _Bucket,
+    d: int,
+    names: list[str],
+    totals: dict[int, str],
+    metrics: dict[int, list[_Metric]],
+    passes: Column,
 ) -> DataFrame:
+    """Kibana's "group remaining as Other" at terms level d: rows at
+    depth ≥ d under a non-kept level-d bucket take the key
+    ``'__other__'``, and ONE groupBy over (depth, keys, kept) merges
+    them per parent — doc_count, every metric at depth ≥ d (hidden avg
+    companions too, for a stacked other_bucket level) and the deeper
+    levels' totals — so the ``__other__`` bucket carries its own
+    sub-chain. The kept flag keeps a real ``'__other__'`` term apart,
+    and kept rows pass through as singleton groups. A fabricated
+    depth-d row carries its level's total (otherwise NULL there), so
+    the envelope never counts it as kept."""
+    from pyspark.sql import types as T
+
+    if not isinstance(flat.schema[b.name].dataType, T.StringType):
+        raise ValueError(
+            f"terms agg {b.name!r}: other_bucket needs a "
+            "string-keyed field (the '__other__' sentinel is "
+            "a string)"
+        )
+    kept = (F.col("depth") < d) | ((F.col("_rank") <= b.size) & passes)
+    merged: dict[str, Column] = {
+        "doc_count": F.sum("doc_count"),
+        totals[d]: F.when(F.col("depth") == d, F.sum("doc_count")),
+    }
+    for d2, ms in metrics.items():
+        if d2 >= d:
+            for m in ms:
+                merged.update(m.merge_exprs())
+    merged.update(
+        (col, F.sum(col)) for d2, col in totals.items() if d2 > d
+    )
+    keys = ["depth", *names, "_kept"]
+    fields = [f for f in flat.schema.fields if f.name not in _TRUNC_COLS]
+    out = (
+        flat.withColumn("_kept", kept)
+        .withColumn(
+            b.name,
+            F.when(F.col("_kept"), F.col(b.name)).otherwise(
+                F.lit("__other__")
+            ),
+        )
+        .groupBy(*keys)
+        .agg(*[
+            F.when(F.col("_kept"), F.first(f.name))
+            .otherwise(merged.get(f.name))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in fields if f.name not in keys
+        ])
+    )
+    return out.select(*[f.name for f in fields])
+
+
+def aggs_flat(docs: DataFrame, spec: dict) -> DataFrame:
     """Compile an ES ``aggs`` tree over the matched-document frame into
     one FLAT bucket DataFrame: a row per bucket at every level plus
     the depth-0 (whole-match-set) row — columns ``depth``, one key
@@ -2697,7 +2677,7 @@ def aggs_flat(
                 "flat frame — aggs_nested serves its doc_count "
                 "envelope"
             )
-        return aggs_flat(narrowed, sub, pins)
+        return aggs_flat(narrowed, sub)
     spec, auto_labels = _resolve_auto_dh(docs, spec)
     chain, metrics, tophits, pipelines = parse_aggs(spec, docs.columns)
     if tophits:
@@ -2713,7 +2693,7 @@ def aggs_flat(
             "envelope), not the flat bucket frame"
         )
     flat = _rollup_flat(docs, chain, metrics)
-    flat = _truncate_terms(flat, chain, metrics, pins)
+    flat = _truncate_terms(flat, chain, metrics)
     hidden = [
         c for ms in metrics.values() for m in ms if m.hidden
         for c in m.columns
@@ -3032,10 +3012,7 @@ def _metric_json(m: _Metric, row: dict) -> dict:
 
 
 def aggs_nested(
-    docs: DataFrame,
-    spec: dict,
-    pins: list[DataFrame] | None = None,
-    with_total: bool = False,
+    docs: DataFrame, spec: dict, with_total: bool = False
 ) -> dict:
     """ES ``aggregations`` response envelope: the flat frame collected
     (bounded by :data:`MAX_BUCKETS`, ES's own default cap) and folded
@@ -3053,7 +3030,7 @@ def aggs_nested(
             # recursion unwraps nested single-bucket layers; the
             # inner envelope's depth-0 total IS this bucket's
             # doc_count (no second count pass for the bucket itself)
-            inner, n = aggs_nested(narrowed, sub, pins, with_total=True)
+            inner, n = aggs_nested(narrowed, sub, with_total=True)
             out = {name: {"doc_count": int(n), **inner}}
         if with_total:
             # the caller's total is the MATCH-SET size (hits.total),
@@ -3068,7 +3045,7 @@ def aggs_nested(
         if b.name in auto_labels:
             b.auto_label = auto_labels[b.name]
     flat = _rollup_flat(docs, chain, metrics)
-    flat = _truncate_terms(flat, chain, metrics, pins)
+    flat = _truncate_terms(flat, chain, metrics)
     rows = [r.asDict() for r in flat.limit(MAX_BUCKETS + 1).collect()]
     if len(rows) > MAX_BUCKETS:
         raise ValueError(
@@ -3645,40 +3622,25 @@ def parse_sort(sort, columns: list[str]) -> list[tuple[str, bool]]:
     return out
 
 
-def sorted_rank(
+def sort_keys(sort: list[tuple[str, bool]]) -> list[Column]:
+    """The sort fields of a doc-metadata frame as ``_sort_0..n``: the
+    columns :func:`sort_rank` orders by and ES's per-hit ``sort``
+    array reads."""
+    return [F.col(f).alias(f"_sort_{i}") for i, (f, _) in enumerate(sort)]
+
+
+def sort_rank(
     hits: DataFrame,
-    doc_source: DataFrame,
     sort: list[tuple[str, bool]],
     k: int,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Re-rank a serve by document metadata fields (ES ``sort``):
-    joins the sort fields from ``doc_source`` (left — a hit missing
-    from the metadata sorts LAST, it is not silently dropped), ranks
-    per query by the sort keys (nulls last, ES's default ``missing:
-    _last``) with ``id_col`` asc as the final tiebreak, and cuts at
-    rank ≤ k. The rank column REPLACES the relevance rank, so ``from``
-    pagination's absolute-rank contract carries over unchanged; the
-    score column (if any) rides along untouched, and the sort-key
-    values come back as ``_sort_0..n`` for ES's per-hit ``sort``
-    array.
-
-    Two shapes, one function: bm25 passes the FULL match set (deep
-    sorted pages reach docs the relevance top-k would never nominate
-    — the Kibana saved search sorting EXTRACT_TS desc pages the whole
-    match set); the vector modes pass their already-cut top-k frame
-    (ES kNN+sort re-orders within the k retrieved)."""
-    fields = [f for f, _ in sort]
-    meta = doc_source.select(
-        F.col("doc_id").alias("_sort_doc_id"),
-        *[
-            F.col(f).alias(f"_sort_{i}")
-            for i, f in enumerate(fields)
-        ],
-    )
-    joined = hits.join(
-        meta, hits[id_col] == meta["_sort_doc_id"], "left"
-    ).drop("_sort_doc_id")
+    """ES ``sort``'s ranking rule over a frame that carries its sort
+    keys (:func:`sort_keys`): per query by the keys (nulls last, ES's
+    ``missing: _last``), ``id_col`` asc as the final tiebreak, cut at
+    rank ≤ k. The rank REPLACES the relevance rank, so ``from``
+    pagination's absolute ranks carry over; a score column rides
+    along untouched."""
     order = [
         (
             F.col(f"_sort_{i}").asc_nulls_last()
@@ -3689,9 +3651,34 @@ def sorted_rank(
     ] + [F.col(id_col).asc()]
     w = Window.partitionBy("query_id").orderBy(*order)
     return (
-        joined.withColumn("rank", F.row_number().over(w))
+        hits.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
     )
+
+
+def sorted_rank(
+    hits: DataFrame,
+    doc_source: DataFrame,
+    sort: list[tuple[str, bool]],
+    k: int,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Re-rank a serve by document metadata fields (ES ``sort``):
+    joins the sort keys from ``doc_source`` (left — a hit missing
+    from the metadata sorts LAST, it is not silently dropped), then
+    ranks by :func:`sort_rank`.
+
+    Two shapes, one function: bm25 passes the FULL match set (deep
+    sorted pages reach docs the relevance top-k would never nominate);
+    the vector modes pass their already-cut top-k frame (ES kNN+sort
+    re-orders within the k retrieved)."""
+    meta = doc_source.select(
+        F.col("doc_id").alias("_sort_doc_id"), *sort_keys(sort)
+    )
+    joined = hits.join(
+        meta, hits[id_col] == meta["_sort_doc_id"], "left"
+    ).drop("_sort_doc_id")
+    return sort_rank(joined, sort, k, id_col)
 
 
 # --- composite aggregation ----------------------------------------------------
@@ -4132,9 +4119,7 @@ def filters_flat(docs: DataFrame, body: dict) -> DataFrame:
     return docs.sparkSession.createDataFrame(data, schema)
 
 
-def filters_nested(
-    docs: DataFrame, body: dict, pins: list[DataFrame] | None = None
-) -> dict:
+def filters_nested(docs: DataFrame, body: dict) -> dict:
     """ES's named-filters response envelope: ``buckets`` is an OBJECT
     keyed by filter name (the named form's wire shape), each bucket
     carrying ``doc_count`` and its metrics — and, when the sub-aggs
@@ -4143,7 +4128,7 @@ def filters_nested(
     nested FILTERS agg (Kibana's two filters splits) routes to the
     one-pass product path."""
     if filters_has_bucket(body):
-        return _filters_chain_nested(docs, body, pins)
+        return _filters_chain_nested(docs, body)
     if _product_inner_name(body) is not None:
         return _filters_product_nested(docs, body)
     names, metrics, row, _ = _filters_row(docs, body)
@@ -4246,16 +4231,14 @@ def _filters_chain_parsed(docs: DataFrame, body: dict):
     return names, exploded, spec, parsed
 
 
-def _filters_chain_nested(
-    docs: DataFrame, body: dict, pins: list[DataFrame] | None = None
-) -> dict:
+def _filters_chain_nested(docs: DataFrame, body: dict) -> dict:
     """The named-filters envelope with a bucket chain inside each
     filter: run the exploded frame through the regular nested fold,
     then re-key the synthetic top level by filter name (ES's OBJECT
     bucket shape) and zero-fill filters nothing matched."""
     names, exploded, spec, parsed = _filters_chain_parsed(docs, body)
     chain, metrics, tophits, pipelines = parsed
-    env = aggs_nested(exploded, spec, pins)
+    env = aggs_nested(exploded, spec)
     node = env[_FILTER_KEY]
     buckets: dict = {}
     for bk in node["buckets"]:
@@ -4604,9 +4587,7 @@ def validate_aggs(spec, docs: DataFrame) -> None:
     parse_aggs(stubbed, docs.columns)
 
 
-def aggregate(
-    docs: DataFrame, spec, pins: list[DataFrame] | None = None
-) -> tuple[dict, int | None]:
+def aggregate(docs: DataFrame, spec) -> tuple[dict, int | None]:
     """The ``aggregations`` envelope of a validated ``aggs`` body over
     the matched frame, plus the match-set size when the plan yields it
     for free (a tree's depth-0 rollup row). A composite page or a
@@ -4617,8 +4598,8 @@ def aggregate(
         return {comp[0]: composite_nested(docs, comp[1])}, None
     filt = _sole_entry(spec, "filters")
     if filt is not None:
-        return {filt[0]: filters_nested(docs, filt[1], pins)}, None
-    return aggs_nested(docs, spec, pins, with_total=True)
+        return {filt[0]: filters_nested(docs, filt[1])}, None
+    return aggs_nested(docs, spec, with_total=True)
 
 
 # --- Kibana saved-object translation ------------------------------------------

@@ -27,8 +27,10 @@ ContextCleaner also reclaims pins once the result DataFrame is
 garbage-collected).
 
 Set ``SPARK_GRAFT_PIN_REUSED=0`` to disable pinning entirely
-(memory-constrained sessions; trades the double computation back);
-``materialize()`` then stores nothing either.
+(memory-constrained sessions; trades the double computation back).
+The switch governs every stored frame: ``reuse()`` pins, the state
+``materialize()`` stores for a caller (a ksqlDB TABLE), and the REST
+layer's per-request persist of a bm25 match set.
 """
 
 from __future__ import annotations
@@ -72,44 +74,6 @@ def pinning_enabled() -> bool:
     per-request pins) so a memory-constrained deployment's opt-out
     governs the serve path too."""
     return os.environ.get("SPARK_GRAFT_PIN_REUSED", "1") != "0"
-
-
-def pin(df: DataFrame, pins: list[DataFrame] | None = None) -> DataFrame:
-    """Persist ``df`` and return a frame ROOTED on its cached relation,
-    so every reference the caller makes reads the one materialization.
-
-    A bare persisted frame is only found again by plan matching, and
-    that misses on self-references: Spark 4.1.2's
-    ``DeduplicateRelations`` gives the second reference of a frame
-    fresh attribute ids (a rollup's ``Expand`` re-instances its
-    pass-through columns), its canonical plan then differs from the
-    cached one, and that reference silently recomputes the whole
-    subtree, scan included.
-    Re-rooting on ``withCachedData`` makes the cached relation itself
-    the leaf of every reference.
-
-    ``pins=None`` registers the pin on the ``reuse()`` lifecycle; a
-    list (the REST layer's per-request pins) takes it instead, and its
-    owner unpersists. Execute the returned frame before its pin is
-    released: run after release, the relation rebuilds its buffers
-    outside the lifecycle. With pinning disabled, ``df`` comes back
-    as is."""
-    if not pinning_enabled():
-        return df
-    if pins is None:
-        df = reuse(df)
-    else:
-        df = df.persist()
-        pins.append(df)
-    session = df.sparkSession
-    jss = session._jsparkSession
-    ds = session._jvm.org.apache.spark.sql.classic.Dataset
-    # a fresh QueryExecution: the caller's may have resolved its
-    # cached-data plan before the persist
-    fresh = ds.ofRows(jss, df._jdf.logicalPlan())
-    return DataFrame(
-        ds.ofRows(jss, fresh.queryExecution().withCachedData()), session
-    )
 
 
 def materialize(df: DataFrame) -> DataFrame:

@@ -157,11 +157,11 @@ _PANELS = {
 def test_served_aggregation_leaves_storage_at_baseline(
     spark, sf_dir, monkeypatch
 ):
-    """A served tree pins its bucket frame for the request only: after
-    each /search the persistent-RDD count is back at its baseline, and
-    so it is after a registry-lifecycle ``aggs_flat`` once
-    ``release_pinned()`` ran. With pinning disabled nothing is
-    pinned at all."""
+    """A served tree leaves storage at its baseline: after each
+    /search the persistent-RDD count is back where it started, a
+    registry-lifecycle ``aggs_flat`` registers no pin (its terms
+    truncation is one linear plan, nothing cached), and with pinning
+    disabled nothing is pinned either."""
     from kafka_cdc_elasticsearch_pipeline_spark.extensions import (
         search_serve as serve,
     )
@@ -186,13 +186,11 @@ def test_served_aggregation_leaves_storage_at_baseline(
         assert out["aggregations"], name
         assert _n_persistent(spark) == before, name
     serve.aggs_flat(meta, _PANELS["by_channel"]).collect()
-    assert caching._PINNED
-    caching.release_pinned()
+    assert caching._PINNED == []
     assert _n_persistent(spark) == before
     monkeypatch.setenv("SPARK_GRAFT_PIN_REUSED", "0")
-    pins: list = []
-    serve.aggregate(meta, _PANELS["terms_other"], pins)
-    assert pins == [] and caching._PINNED == []
+    serve.aggregate(meta, _PANELS["terms_other"])
+    assert caching._PINNED == []
     assert _n_persistent(spark) == before
 
 

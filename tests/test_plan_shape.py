@@ -37,6 +37,11 @@ def live_plan(p: str) -> str:
     return "\n".join(out)
 
 
+def cached(p: str) -> bool:
+    """Whether plan ``p`` reads or defines a cached relation."""
+    return "InMemoryRelation" in p or "InMemoryTableScan" in p
+
+
 def doc_scans(p: str) -> int:
     """How often the executed plan ``p`` scans a file: its live
     FileScans plus one per DISTINCT cached relation whose definition
@@ -658,27 +663,20 @@ def test_rrf_fusion_plan_is_pool_sized(spark, tmp_path, sf_dir):
     assert "BroadcastHashJoin" in p  # codebook / query-side broadcasts
 
 
-def test_aggs_rollup_is_one_pass_with_pinned_bucket_frame(spark, sf_dir):
+def test_aggs_rollup_is_one_pass_with_linear_truncation(spark, sf_dir):
     """The ES-aggs compiler's scale contract: the whole bucket tree is
     ONE rollup over the match set (Expand → partial agg → ONE shuffle
     on the grouping keys → final agg — grouping sets, never a
     per-level re-aggregation of the documents), and the terms
-    truncation branches read the PINNED bucket frame instead of
-    re-running the match-set pass per reference. A plain persist
-    did not give that on Spark 4.1.2: ``DeduplicateRelations``
-    re-instances the rollup's ``Expand`` in every further reference,
-    whose plan then misses the cache and re-scans the docs, while
-    the asserts below still passed on the one reference that hit.
-    The branches now reach the pin through ``caching.pin``, a frame
-    rooted on the cached relation itself; the asserts here show the
-    pin exists, and ``test_served_tree_scans_the_docs_once`` shows
-    every branch reads it."""
+    truncation is one linear plan over that rollup's output: a
+    rank-limited window (WindowGroupLimit) and filters, with no
+    cached relation, no self-join and no union — nothing references
+    the bucket frame twice, so nothing re-runs the match-set pass."""
     from pyspark.sql import functions as F
 
     from kafka_cdc_elasticsearch_pipeline_spark.extensions import (
         search_serve as serve,
     )
-    from kafka_cdc_elasticsearch_pipeline_spark.operators import caching
     from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
 
     meta = load_table(spark, sf_dir, "documents").select(
@@ -701,45 +699,40 @@ def test_aggs_rollup_is_one_pass_with_pinned_bucket_frame(spark, sf_dir):
             },
         }
     }
-    try:
-        flat = serve.aggs_flat(meta, spec)
-        p = final_plan(flat)
-        # the truncation union's big branches read the pin, not the scan
-        assert "InMemoryTableScan" in p
-        assert p.count("InMemoryRelation") >= 1
-        # no per-level re-aggregation of the DOCUMENTS: the Expand
-        # (grouping sets) appears once per cached-plan printout, and
-        # the bucket-frame work after it is windows/joins only
-        assert "WindowGroupLimit" in p  # rank-limit pushed into window
+    flat = serve.aggs_flat(meta, spec)
+    p = final_plan(flat).split("+- == Initial Plan ==")[0]
+    # no per-level re-aggregation of the DOCUMENTS: one Expand
+    # (grouping sets), and the bucket-frame work after it is a
+    # rank-limited window and filters
+    assert p.count("Expand") == 1
+    assert "WindowGroupLimit" in p  # rank-limit pushed into window
+    assert not cached(p)
+    assert "Join" not in p and "Union" not in p
 
-        # without a truncating terms level there is no self-union at
-        # all: exactly one Expand, one exchange pair, zero joins
-        flat2 = serve.aggs_flat(
-            meta,
-            {"by_day": {"date_histogram": {"field": "ts",
-                                           "fixed_interval": "1d"}}},
-        )
-        p2 = final_plan(flat2)
-        assert p2.count("Expand") == 1
-        assert "Join" not in p2 and "Union" not in p2
-    finally:
-        caching.release_pinned()
+    # without a truncating terms level: exactly one Expand, one
+    # exchange pair, zero joins, no window
+    flat2 = serve.aggs_flat(
+        meta,
+        {"by_day": {"date_histogram": {"field": "ts",
+                                       "fixed_interval": "1d"}}},
+    )
+    p2 = final_plan(flat2)
+    assert p2.count("Expand") == 1
+    assert "Join" not in p2 and "Union" not in p2
 
 
 def test_served_tree_scans_the_docs_once(spark, sf_dir, monkeypatch):
     """A terms-bearing tree over a parquet-backed frame scans the docs
-    ONCE: the rollup fills the pinned bucket frame, and the keep-list
-    window, the semi-join and the union all read it. The served
-    envelope (``aggs_nested`` with the REST layer's per-request pins)
-    is one Spark action, sum_other_doc_count included; the lazy gate
-    frame (``aggs_flat``, registry pins) shows the same one scan when
-    run."""
+    ONCE: the truncation is one linear plan over the rollup's output,
+    so no branch reads the bucket frame again and nothing is cached.
+    The served envelope (``aggs_nested``) is one Spark action,
+    sum_other_doc_count included; the lazy gate frame (``aggs_flat``)
+    shows the same one scan when run."""
     from pyspark.sql import functions as F
 
     from kafka_cdc_elasticsearch_pipeline_spark.extensions import (
         search_serve as serve,
     )
-    from kafka_cdc_elasticsearch_pipeline_spark.operators import caching
     from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
 
     meta = load_table(spark, sf_dir, "documents").select(
@@ -772,34 +765,27 @@ def test_served_tree_scans_the_docs_once(spark, sf_dir, monkeypatch):
         return out
 
     monkeypatch.setattr(frame_cls, "collect", recording)
-    pins: list = []
-    try:
-        env = serve.aggs_nested(meta, spec, pins)
-    finally:
-        for df in pins:
-            df.unpersist()
+    env = serve.aggs_nested(meta, spec)
     monkeypatch.undo()
-    assert pins and env["by_day"]["buckets"]
+    assert env["by_day"]["buckets"]
     assert len(actions) == 1
     assert doc_scans(actions[0]) == 1
-    try:
-        assert doc_scans(final_plan(serve.aggs_flat(meta, spec))) == 1
-    finally:
-        caching.release_pinned()
+    assert not cached(actions[0])
+    assert doc_scans(final_plan(serve.aggs_flat(meta, spec))) == 1
 
 
 def test_metric_ordered_truncation_keeps_window_group_limit(spark, sf_dir):
     """terms `order` by a metric only parameterizes the truncation
     window's sort — the rank-limit pushdown (WindowGroupLimit), the
-    one-Expand rollup, and the pinned bucket frame must all survive
-    the re-parameterization (a lost WindowGroupLimit would sort every
+    one-Expand rollup, and the linear truncation (no cached relation,
+    no self-join, no union) must all survive the
+    re-parameterization (a lost WindowGroupLimit would sort every
     bucket of a giant parent in one task)."""
     from pyspark.sql import functions as F
 
     from kafka_cdc_elasticsearch_pipeline_spark.extensions import (
         search_serve as serve,
     )
-    from kafka_cdc_elasticsearch_pipeline_spark.operators import caching
     from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
 
     meta = load_table(spark, sf_dir, "documents").select(
@@ -823,43 +809,80 @@ def test_metric_ordered_truncation_keeps_window_group_limit(spark, sf_dir):
             },
         }
     }
-    try:
-        flat = serve.aggs_flat(meta, spec)
-        p = final_plan(flat)
-        assert "WindowGroupLimit" in p  # rank-limit still pushed down
-        assert "InMemoryTableScan" in p  # branches read the pin
-        assert "CartesianProduct" not in p
-        # the window orders by the metric column (not doc_count)
-        assert "mean" in p.split("WindowGroupLimit")[1].split("\n")[0]
-    finally:
-        caching.release_pinned()
+    flat = serve.aggs_flat(meta, spec)
+    p = final_plan(flat).split("+- == Initial Plan ==")[0]
+    assert "WindowGroupLimit" in p  # rank-limit still pushed down
+    assert p.count("Expand") == 1
+    assert not cached(p)  # nothing cached, nothing re-read
+    assert "Join" not in p and "Union" not in p
+    assert "CartesianProduct" not in p
+    # the window orders by the metric column (not doc_count)
+    assert "mean" in p.split("WindowGroupLimit")[1].split("\n")[0]
+
+
+def _partial_limits_below_exchange(p: str) -> int:
+    """How many Partial WindowGroupLimits in plan ``p`` sit directly
+    below an Exchange: the map-side top-k that bounds what a rank
+    window's shuffle ships."""
+    lines = p.split("+- == Initial Plan ==")[0].splitlines()
+    n = 0
+    for i, line in enumerate(lines):
+        if "WindowGroupLimit" in line and "Partial" in line:
+            parent = next(
+                up for up in reversed(lines[:i]) if _col(up) < _col(line)
+            )
+            n += "Exchange" in parent
+    return n
+
+
+def test_terms_truncation_ships_map_side_top_k(spark, sf_dir):
+    """A depth-1 terms level (every bucket ranks in ONE partition) and
+    a non-leaf terms level (terms → terms: its descendants rank with
+    their bucket) each keep a Partial WindowGroupLimit below the rank
+    window's Exchange, so a high-cardinality field ships about
+    size × partitions rows to the rank, not every bucket."""
+    from kafka_cdc_elasticsearch_pipeline_spark.extensions import (
+        search_serve as serve,
+    )
+    from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import load_table
+
+    meta = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", "source"
+    )
+    depth1 = {"t": {"terms": {"field": "doc_id", "size": 3}}}
+    p = final_plan(serve.aggs_flat(meta, depth1))
+    assert _partial_limits_below_exchange(p) == 1
+    nested = {"t": {"terms": {"field": "lang", "size": 2},
+                    "aggs": {"u": {"terms": {"field": "source",
+                                             "size": 2}}}}}
+    p = final_plan(serve.aggs_flat(meta, nested))
+    assert _partial_limits_below_exchange(p) == 2
+    assert not cached(p)
+    assert "Join" not in p and "Union" not in p
 
 
 def test_filters_chain_explode_rollup_shape(plans):
     """Round 14: the filters+chain agg compiles to the matched-filter
     EXPLODE feeding ONE shared rollup (Generate → Expand →
     HashAggregate with map-side partials) — never N per-filter
-    aggregation plans unioned. The synthetic terms keep-list rides a
-    COLUMN-PRUNED count-only branch that ends in
-    TakeOrderedAndProject and semi-joins back — bucket-bounded, never
-    a per-filter corpus re-aggregation of the metric columns."""
+    aggregation plans unioned. The synthetic terms level truncates in
+    the same linear plan (a rank-limited window over the rollup's
+    output: no cached relation, no join, no union), so the metric
+    columns are aggregated by that one rollup and never again per
+    filter."""
     p = plans("ext_search_aggs_filters_chain")
+    p = p.split("+- == Initial Plan ==")[0]
     assert "Generate explode" in p      # the multi-membership explode
-    assert "Expand" in p                # the shared rollup
-    assert "LeftSemi" in p and "TakeOrderedAndProject" in p
-    # the keep-list branch reads the pinned bucket frame: no avg/sum
-    # of the metric fields (no rollup at all) is recomputed per
-    # filter on that side — only its live operators count, not the
-    # printed definition of the cache it reads
-    live = live_plan(p)
-    keep_branch = live[live.index("TakeOrderedAndProject"):]
+    assert p.count("Expand") == 1       # the shared rollup
+    assert "WindowGroupLimit" in p      # the rank-limited truncation
+    assert not cached(p)
+    assert "Join" not in p and "Union" not in p
+    # the avg of the metric field: the rollup's partial + final only
     agg_lines = [
-        line for line in keep_branch.splitlines()
-        if "HashAggregate" in line
+        line for line in p.splitlines()
+        if "HashAggregate" in line and "avg(" in line
     ]
-    assert "InMemoryTableScan" in keep_branch
-    assert "Expand" not in keep_branch
-    assert all("avg(" not in line for line in agg_lines)
+    assert len(agg_lines) == 2
 
 
 def test_dh_timezone_is_key_expression_not_extra_pass(plans):
@@ -936,15 +959,16 @@ def test_extended_stats_ranks_are_jvm_aggregate_expressions(plans):
     """Round 15: extended_stats' component-sum variance and
     percentile_ranks' conditional counts are plain aggregate
     EXPRESSIONS inside the shared rollup — whole-stage-codegen JVM
-    work (no Python eval node anywhere), the truncation branches
-    reading the pinned bucket frame; the single join is the
-    keep-list semi-join over that bucket-sized pin, never a second
-    corpus pass."""
+    work (no Python eval node anywhere), the truncation one
+    rank-limited window over the rollup's output — no cached
+    relation, no join, no union, never a second corpus pass."""
     p = plans("ext_search_aggs_extended_stats")
+    p = p.split("+- == Initial Plan ==")[0]
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    assert "Expand" in p                      # the one rollup
-    assert "InMemoryTableScan" in p           # branches read the pin
-    assert p.count("SortMergeJoin") + p.count("BroadcastHashJoin") <= 1
+    assert p.count("Expand") == 1             # the one rollup
+    assert "WindowGroupLimit" in p
+    assert not cached(p)
+    assert "Join" not in p and "Union" not in p
 
 
 def test_auto_dh_serves_as_one_plain_rollup(spark, sf_dir):
@@ -996,10 +1020,14 @@ def test_filter_bucket_predicate_reaches_the_scan(plans):
 def test_multi_terms_is_the_same_one_rollup(plans):
     """Round 15: the compound-key struct is an EXPRESSION inside the
     shared rollup key column — multi_terms pays exactly the terms
-    plan (pin + keep-list), no extra pass, no Python eval."""
+    plan (one rollup, one rank-limited window, nothing cached, no
+    join, no union), no extra pass, no Python eval."""
     p = plans("ext_search_aggs_multi_terms")
+    p = p.split("+- == Initial Plan ==")[0]
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-    assert "Expand" in p and "InMemoryTableScan" in p
+    assert p.count("Expand") == 1 and "WindowGroupLimit" in p
+    assert not cached(p)
+    assert "Join" not in p and "Union" not in p
 
 
 def test_banded_hamming_fingerprints_computed_once(plans):

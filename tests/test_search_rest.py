@@ -1238,6 +1238,42 @@ def test_served_shapes_count_passes(meta_server, monkeypatch):
     assert got == {name: n for name, (_, n) in shapes.items()}
 
 
+def test_served_terms_panel_runs_three_jobs(spark):
+    """A served date_histogram × terms panel (the dashboard's "Ratings
+    by Channel" shape) runs at most 3 Spark jobs once warm: the
+    rollup's shuffle, the rank window's shuffle and the collect. The
+    terms truncation reads the rollup's output once, so no job fills
+    or re-reads a cached bucket frame. Counted with the status
+    tracker under a job group set around the call."""
+    chans = ("web", "ios", "android", "kiosk")
+    rows = [
+        (i, f"2024-01-0{1 + i % 3} 0{i % 9}:00:00", chans[i * i % 7 % 4])
+        for i in range(60)
+    ]
+    docs = spark.createDataFrame(
+        rows, "doc_id bigint, ts_s string, channel string"
+    ).select("doc_id", F.col("ts_s").cast("timestamp").alias("ts"),
+             "channel")
+    server = SearchRestServer(spark, doc_source=docs)
+    body = {"aggs": {"k2": {
+        "date_histogram": {"field": "ts", "fixed_interval": "1d",
+                           "min_doc_count": 1},
+        "aggs": {"k3": {"terms": {"field": "channel", "size": 2,
+                                  "order": {"_count": "desc"}}}},
+    }}}
+    warm = server.search(body)
+    sc, group = spark.sparkContext, "served-terms-panel-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = server.search(body)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    days = out["aggregations"]["k2"]["buckets"]
+    assert len(days) == 3 and all(len(d["k3"]["buckets"]) == 2 for d in days)
+    assert out["aggregations"] == warm["aggregations"]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+
+
 def test_composite_aggs_over_rest(meta_server):
     """The composite paging cursor over /search: match_all pages tile
     the bucket space, after_key round-trips through the JSON envelope,

@@ -362,23 +362,202 @@ def test_aggs_nested_with_total(frame):
     assert total == 0
 
 
-def test_pin_kill_switch_respected(frame, monkeypatch):
-    """SPARK_GRAFT_PIN_REUSED=0 must govern the per-request pins too
-    (review finding: the REST path persisted unconditionally)."""
-    monkeypatch.setenv("SPARK_GRAFT_PIN_REUSED", "0")
-    pins = []
-    serve.aggs_flat(
-        frame, {"t": {"terms": {"field": "lang", "size": 1}}}, pins=pins
-    ).collect()
-    assert pins == []
-    monkeypatch.setenv("SPARK_GRAFT_PIN_REUSED", "1")
-    pins = []
-    serve.aggs_flat(
-        frame, {"t": {"terms": {"field": "lang", "size": 1}}}, pins=pins
-    ).collect()
-    assert len(pins) == 1
-    for df in pins:
-        df.unpersist()
+def test_pin_kill_switch_respected(spark, sf_dir, tmp_path, monkeypatch):
+    """SPARK_GRAFT_PIN_REUSED=0 must govern every pin site: the
+    registry-lifecycle ``reuse()`` list and the REST layer's
+    per-request persist of a bm25 match set (review finding: the REST
+    path persisted unconditionally). A served aggregation pins
+    nothing either way."""
+    from kafka_cdc_elasticsearch_pipeline_spark.extensions import (
+        search_index as si,
+    )
+    from kafka_cdc_elasticsearch_pipeline_spark.extensions.search_rest import (
+        SearchRestServer,
+    )
+    from kafka_cdc_elasticsearch_pipeline_spark.operators import caching
+    from kafka_cdc_elasticsearch_pipeline_spark.sources import lakelog
+    from kafka_cdc_elasticsearch_pipeline_spark.sources.tables import (
+        load_table,
+    )
+
+    src, bm25_root = str(tmp_path / "src"), str(tmp_path / "bm25")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    lakelog.append_commit(
+        spark, src, docs.select("doc_id", "text", F.lit(1).alias("_ts_ms"))
+    )
+    si.bm25_index_maintain(spark, src, bm25_root)
+    server = SearchRestServer(
+        spark, bm25_root=bm25_root,
+        doc_source=docs.select("doc_id", F.length("text").alias("n")),
+    )
+    seen: list[int] = []
+    real = SearchRestServer._search
+
+    def spy(self, req, pins):
+        out = real(self, req, pins)
+        seen.append(len(pins))
+        return out
+
+    monkeypatch.setattr(SearchRestServer, "_search", spy)
+    word = docs.first()["text"].split()[0]
+    bm25 = {"mode": "bm25", "query": word, "k": 3,
+            "aggs": {"n": {"terms": {"field": "n", "size": 2}}}}
+    caching.release_pinned()
+    for enabled, pinned in (("0", 0), ("1", 1)):
+        monkeypatch.setenv("SPARK_GRAFT_PIN_REUSED", enabled)
+        assert server.search(bm25)["aggregations"]["n"]["buckets"]
+        assert server.search({"aggs": bm25["aggs"]})["aggregations"]
+        assert seen == [pinned, 0]
+        seen.clear()
+        caching.reuse(spark.range(3))
+        assert len(caching._PINNED) == pinned
+        caching.release_pinned()
+
+
+# --- terms truncation: reference-fold property -----------------------------
+
+
+def _ref_terms(docs: list[dict], levels: list[dict]) -> dict:
+    """A pure-Python ES fold of a terms chain over raw rows: per parent,
+    group by the level's field (NULL keys in no bucket), drop buckets
+    under ``min_doc_count``, order (``_count``/``_key``/the level's
+    metric — a bucket without values last — key asc tiebreak), keep
+    ``size``; the rest is
+    ``sum_other_doc_count`` and, with ``other_bucket``, one trailing
+    ``'__other__'`` bucket over their docs that carries the deeper
+    levels folded the same way."""
+    lv, deeper = levels[0], levels[1:]
+    groups: dict = {}
+    for r in docs:
+        if r[lv["field"]] is not None:
+            groups.setdefault(r[lv["field"]], []).append(r)
+
+    def metric(rows: list[dict]):
+        # a bucket with no values has no metric: it orders last
+        vals = [r["v"] for r in rows if r["v"] is not None]
+        if not vals:
+            return None
+        return sum(vals) if lv["metric"] == "sum" else max(vals)
+
+    def bucket(key, rows: list[dict]) -> dict:
+        value = metric(rows)
+        if value is None and lv["metric"] == "sum":
+            value = 0.0  # ES serves an empty sum as 0
+        out = {"key": key, "doc_count": len(rows),
+               lv["name"] + "_m": {"value": value}}
+        if deeper:
+            out[deeper[0]["name"]] = _ref_terms(rows, deeper)
+        return out
+
+    cands = [
+        (k, rows) for k, rows in sorted(groups.items())
+        if len(rows) >= lv["min_doc_count"]
+    ]
+    key, asc = lv["order"]
+    if key == "_key":
+        cands.sort(key=lambda kr: kr[0], reverse=not asc)
+    elif key == "_count":
+        cands.sort(key=lambda kr: len(kr[1]), reverse=not asc)
+    else:
+        valued = [kr for kr in cands if metric(kr[1]) is not None]
+        valued.sort(key=lambda kr: metric(kr[1]), reverse=not asc)
+        cands = valued + [kr for kr in cands if metric(kr[1]) is None]
+    kept = cands[: lv["size"]]
+    kept_keys = {k for k, _ in kept}
+    rest = [r for k, rows in groups.items() if k not in kept_keys
+            for r in rows]
+    buckets = [bucket(k, rows) for k, rows in kept]
+    if lv["other_bucket"] and rest:
+        buckets.append(bucket("__other__", rest))
+    return {"buckets": buckets, "sum_other_doc_count": len(rest)}
+
+
+def _terms_spec(levels: list[dict]) -> dict:
+    lv = levels[0]
+    key, asc = lv["order"]
+    body = {"field": lv["field"], "size": lv["size"],
+            "min_doc_count": lv["min_doc_count"],
+            "order": {key: "asc" if asc else "desc"}}
+    if lv["other_bucket"]:
+        body["other_bucket"] = True
+    aggs = {lv["name"] + "_m": {lv["metric"]: {"field": "v"}}}
+    if levels[1:]:
+        aggs.update(_terms_spec(levels[1:]))
+    return {lv["name"]: {"terms": body, "aggs": aggs}}
+
+
+def _level_strategy(name: str, field: str):
+    from hypothesis import strategies as st
+
+    return st.fixed_dictionaries({
+        "name": st.just(name),
+        "field": st.just(field),
+        "size": st.integers(1, 3),
+        "min_doc_count": st.integers(1, 3),
+        "other_bucket": st.booleans(),
+        "metric": st.sampled_from(["sum", "max"]),
+        "order": st.tuples(
+            st.sampled_from(["_count", "_key", name + "_m"]), st.booleans()
+        ),
+    })
+
+
+def _tree_strategy():
+    from hypothesis import strategies as st
+
+    outer = _level_strategy("t1", "a")
+    inner = _level_strategy("t2", "b").map(
+        lambda lv: {**lv, "other_bucket": False}
+    )
+    return st.one_of(
+        st.tuples(outer).map(list), st.tuples(outer, inner).map(list)
+    )
+
+
+def _docs_strategy():
+    from hypothesis import strategies as st
+
+    return st.lists(
+        st.tuples(
+            st.sampled_from([None, "p", "q", "r", "s"]),
+            st.sampled_from([None, "x", "y", "z"]),
+            st.one_of(st.none(), st.integers(0, 9)),
+        ),
+        max_size=24,
+    )
+
+
+def test_terms_truncation_matches_reference_fold(spark):
+    """``aggs_nested`` over random small doc frames and terms → terms
+    trees (``_key``/``_count``/metric order either way,
+    ``min_doc_count``, ``other_bucket`` on the outer level) equals a
+    pure-Python ES fold of the raw rows — the evidence for the
+    non-leaf and ``other_bucket`` branches of the one-plan
+    truncation, which no reference dashboard panel exercises."""
+    from hypothesis import example, given, settings
+
+    def lv(name, field, size, mdc, other, order):
+        return {"name": name, "field": field, "size": size,
+                "min_doc_count": mdc, "other_bucket": other,
+                "metric": "max", "order": order}
+
+    @settings(max_examples=25, deadline=None, database=None)
+    @given(rows=_docs_strategy(), levels=_tree_strategy())
+    # a bucket under min_doc_count sorts first by key: it must not
+    # take a kept slot, and it folds into __other__
+    @example(
+        rows=[("p", "x", 1), ("q", "x", 2), ("q", "y", 3), ("r", "z", 4),
+              ("r", "z", None)],
+        levels=[lv("t1", "a", 1, 2, True, ("_key", True)),
+                lv("t2", "b", 1, 1, False, ("t2_m", False))],
+    )
+    def check(rows, levels):
+        df = spark.createDataFrame(rows, "a string, b string, v bigint")
+        got = serve.aggs_nested(df, _terms_spec(levels))
+        docs = [dict(zip("abv", r)) for r in rows]
+        assert got == {"t1": _ref_terms(docs, levels)}
+
+    check()
 
 
 # --- composite aggregation ----------------------------------------------------
