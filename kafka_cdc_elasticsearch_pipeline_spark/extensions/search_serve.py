@@ -539,6 +539,9 @@ class _Bucket:
         self.order_key = "_count"
         self.order_asc = False
         self.order_col: str | None = None
+        # what the envelope serves for that metric on a bucket with no
+        # values for its field (0 for a sum): the bucket orders on it
+        self.order_empty: float | None = None
         # composite-only (parse_composite overrides): null keys form
         # an explicit first-ordered bucket instead of being dropped
         self.missing_bucket = False
@@ -1731,6 +1734,20 @@ def _metric_column(
     return m.name
 
 
+def _empty_value(level_metrics: list[_Metric], key: str) -> float | None:
+    """What the envelope serves for the resolved metric path ``key`` on
+    a bucket whose field has no values: ES's arithmetic contract serves
+    counts and sums as 0, every other statistic as null (None)."""
+    name, _, part = key.partition(".")
+    m = next(m for m in level_metrics if m.name == name)
+    if m.typ in ("sum", "value_count", "cardinality") or (
+        m.typ in ("stats", "extended_stats")
+        and part in ("count", "sum", "sum_of_squares")
+    ):
+        return 0.0
+    return None
+
+
 def _resolve_order_metric(b: _Bucket, level_metrics: list[_Metric]) -> str:
     """A terms ``order`` key that names a metric resolves to that
     metric's flat-frame column. ES's contract: the metric must be a
@@ -2353,6 +2370,7 @@ def parse_aggs(spec: dict, columns: list[str]) -> tuple[
             "_key", "_count"
         ):
             b.order_col = _resolve_order_metric(b, metrics.get(d, []))
+            b.order_empty = _empty_value(metrics.get(d, []), b.order_key)
     # other_bucket levels: the __other__ merge re-aggregates flat
     # bucket rows, so every metric at that depth must be MERGEABLE
     # from its flat columns — avg gets hidden sum/count companions;
@@ -2508,10 +2526,11 @@ def _terms_order_cols(
     over ``count``/``metric`` — the level's doc_count and order
     metric, or their copies on the bucket's descendants.
     Key order needs no tiebreak (keys are unique per parent);
-    doc_count and metric orders tiebreak key asc (ES); a NULL metric
-    (bucket with no values for the field) sorts LAST either
-    direction — the bucket can't compete on a value it doesn't
-    have."""
+    doc_count and metric orders tiebreak key asc (ES). A bucket with no
+    values for the field orders on what the envelope serves for it:
+    0 for a sum or count (``b.order_empty``), else NULL, which sorts
+    LAST either direction — the bucket can't compete on a value it
+    doesn't have."""
     kc = F.col(b.name)
     if b.order_key == "_key":
         return [kc.asc() if b.order_asc else kc.desc()]
@@ -2556,7 +2575,11 @@ def _truncate_terms(
     for d, b in enumerate(chain, start=1):
         if b.typ not in ("terms", "multi_terms"):
             continue
-        metric = F.col(b.order_col) if b.order_col else None
+        metric = None
+        if b.order_col:
+            metric = F.col(b.order_col)
+            if b.order_empty is not None:
+                metric = F.coalesce(metric, F.lit(b.order_empty))
         count = F.col("doc_count")
         if d < len(names):
             # the level-d bucket's order values onto its descendants
@@ -3137,7 +3160,8 @@ def aggs_nested(
         if b.typ in ("terms", "multi_terms"):
             # mirror _terms_order_cols exactly (two-pass stable sorts:
             # tiebreak first, then the primary key with its direction;
-            # NULL metric values last either direction)
+            # an empty bucket's served value, or NULL last either
+            # direction)
             if b.order_key == "_key":
                 mine.sort(key=lambda r: r[b.name], reverse=not b.order_asc)
             elif b.order_key == "_count":
@@ -3146,12 +3170,14 @@ def aggs_nested(
                     key=lambda r: r["doc_count"], reverse=not b.order_asc
                 )
             else:
+                def served(r):
+                    v = r[b.order_col]
+                    return b.order_empty if v is None else v
+
                 mine.sort(key=lambda r: r[b.name])
-                valued = [r for r in mine if r[b.order_col] is not None]
-                valued.sort(
-                    key=lambda r: r[b.order_col], reverse=not b.order_asc
-                )
-                mine = valued + [r for r in mine if r[b.order_col] is None]
+                valued = [r for r in mine if served(r) is not None]
+                valued.sort(key=served, reverse=not b.order_asc)
+                mine = valued + [r for r in mine if served(r) is None]
         elif b.typ in ("range", "date_range"):
             order = {
                 label: i

@@ -29,8 +29,9 @@ garbage-collected).
 Set ``SPARK_GRAFT_PIN_REUSED=0`` to disable pinning entirely
 (memory-constrained sessions; trades the double computation back).
 The switch governs every stored frame: ``reuse()`` pins, the state
-``materialize()`` stores for a caller (a ksqlDB TABLE), and the REST
-layer's per-request persist of a bm25 match set.
+``materialize()`` stores for a caller (a ksqlDB TABLE, a streaming
+enrich join's static table), and the REST layer's per-request
+persist of a bm25 match set.
 """
 
 from __future__ import annotations
@@ -78,8 +79,10 @@ def pinning_enabled() -> bool:
 
 def materialize(df: DataFrame) -> DataFrame:
     """Run ``df``'s plan once and return a frame over the stored result,
-    for a relation read many times after it is built (a ksqlDB TABLE's
-    state store).
+    for a relation read many times after it is built. Two callers: a
+    ksqlDB TABLE's state store (``ksql.translate``), and the static
+    table a streaming enrich join reads in every micro-batch
+    (``relational.enrich_stream_table``).
 
     The result keeps the partitioning the executed plan gave it (AQE
     coalesces a small aggregate to one partition), so a later filter
@@ -93,6 +96,54 @@ def materialize(df: DataFrame) -> DataFrame:
     if not pinning_enabled():
         return df
     return df.localCheckpoint(eager=True)
+
+
+#: leaf relations whose rows are fixed once the frame is built: a file
+#: relation lists its files when read (``spark.read.parquet``,
+#: ``lakelog.read``), local rows, and a stored RDD
+_FIXED_LEAVES = {"LocalRelation", "LogicalRDD"}
+#: expressions Spark binds to the clock anew in every micro-batch
+_CLOCK_READS = {
+    "CurrentDate", "CurrentTimestamp", "CurrentTime", "Now", "LocalTimestamp",
+}
+
+
+def answer_is_fixed(df: DataFrame) -> bool:
+    """Whether every run of ``df`` returns the same rows, so running it
+    once answers for every later run. Each leaf must be a file relation
+    over an ``InMemoryFileIndex`` (Spark fixes its listing when the
+    frame is read: a file added to the path afterwards is never
+    scanned), local rows or a stored RDD, and no expression may be
+    nondeterministic or read the clock. A DataSource V2 leaf, a Python
+    data source say, is planned anew per run and is not fixed."""
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        children = seq(node.children())
+        if not children:
+            kind = node.getClass().getSimpleName()
+            if kind == "LogicalRelation":
+                relation = node.relation()
+                if (
+                    relation.getClass().getSimpleName() != "HadoopFsRelation"
+                    or relation.location().getClass().getSimpleName()
+                    != "InMemoryFileIndex"
+                ):
+                    return False
+            elif kind not in _FIXED_LEAVES:
+                return False
+        for e in seq(node.expressions()):
+            if not e.deterministic() or any(
+                x.getClass().getSimpleName() in _CLOCK_READS
+                for x in seq(e.collectLeaves())
+            ):
+                return False
+        stack.extend(children + seq(node.subqueries()))
+    return True
 
 
 def release(df: DataFrame) -> None:

@@ -2,8 +2,10 @@
 
 Everything here is declarative DataFrame composition — Catalyst does
 predicate pushdown, column pruning, join-strategy selection, and AQE
-does runtime skew handling. No operator in this module materializes,
-collects, or loops driver-side, so each scales with executor count.
+does runtime skew handling. No operator in this module collects or
+loops driver-side, so each scales with executor count. One stores
+state: ``enrich_stream_table`` runs a streaming join's fixed static
+table once, when the DAG is built.
 """
 
 from __future__ import annotations
@@ -12,6 +14,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from kafka_cdc_elasticsearch_pipeline_spark.operators import caching
 
 
 def split_streams(
@@ -56,8 +60,33 @@ def enrich_stream_table(
     never shuffles. If the dim outgrows broadcast, drop the hint and
     Catalyst falls back to shuffled hash / sort-merge, ideally with
     both sides bucketed on the key (see plans/ notes).
+
+    The build (broadcast) side depends on the stream:
+
+    - a batch ``stream``, or a streaming one whose table is not fixed
+      (``caching.answer_is_fixed``: a DataSource V2 leaf is planned anew
+      per micro-batch), builds the TABLE side, re-planned per run;
+    - a streaming ``stream`` over a fixed table reads the table from
+      state stored once, here (``caching.materialize``), so no
+      micro-batch rescans, re-reduces or re-broadcasts it. An inner
+      join then drops the hint and Spark builds the smaller side by
+      its size statistics: the micro-batch, below
+      ``spark.sql.autoBroadcastJoinThreshold``. A left outer join can
+      only build its right side, so it keeps broadcasting the table,
+      now from the stored rows.
+
+    With pinning disabled (``SPARK_GRAFT_PIN_REUSED=0``) nothing is
+    stored and every stream takes the first path.
     """
-    t = F.broadcast(table) if broadcast_table else table
+    stored = (
+        stream.isStreaming
+        and caching.pinning_enabled()
+        and caching.answer_is_fixed(table)
+    )
+    if stored:
+        table = caching.materialize(table)
+    hint = broadcast_table and not (stored and how == "inner")
+    t = F.broadcast(table) if hint else table
     joined = stream.join(t, stream_key == table_key, how)
     return joined.select(*projection)
 

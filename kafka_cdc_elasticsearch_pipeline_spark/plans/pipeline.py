@@ -17,9 +17,14 @@ rating_time, channel, message)` and a `customers` changelog
 create_ts, update_ts, op_seq)`.
 
 Every edge is lazy DataFrame composition — the whole DAG is one
-Catalyst plan per sink, so shared prefixes (the enriched stream feeds
-both the filter and the windowed agg) are planned once and, under AQE,
-their exchanges are reused rather than recomputed.
+Catalyst plan per sink. Sinks share no work: the enriched stream
+feeds both the filter and the windowed agg, and each sink's plan runs
+that prefix again. Streamed, each sink is its own query: every
+micro-batch re-runs its prefix, and the stateful window query plans
+without AQE. What a streamed DAG does run once is TABLE CUSTOMERS
+when it is fixed: ``enrich_stream_table`` stores it as the DAG is
+built, and every micro-batch of the three queries joins the stored
+rows.
 """
 
 from __future__ import annotations
@@ -58,6 +63,9 @@ def ratings_pipeline(ratings: DataFrame, customers_changelog: DataFrame) -> dict
     # RATINGS_WITH_CUSTOMER_DATA (ksqldb-statements.sql:50-60):
     # LEFT JOIN ON CAST(user_id AS STRING) = customer_id,
     # FULL_NAME = first_name + ' ' + last_name, WHERE first_name IS NOT NULL.
+    # The WHERE drops every unmatched rating, so the join is inner (as
+    # Catalyst already plans the LEFT JOIN); an inner join lets a
+    # micro-batch be the broadcast side against the stored table.
     enriched = enrich_stream_table(
         live,
         customers,
@@ -77,7 +85,7 @@ def ratings_pipeline(ratings: DataFrame, customers_changelog: DataFrame) -> dict
             customers["club_status"],
             customers["email"],
         ],
-        how="left",
+        how="inner",
     ).filter(F.col("full_name").isNotNull())
 
     # UNHAPPY_PLATINUM_CUSTOMERS (ksqldb-statements.sql:63-68):

@@ -421,8 +421,8 @@ def _ref_terms(docs: list[dict], levels: list[dict]) -> dict:
     """A pure-Python ES fold of a terms chain over raw rows: per parent,
     group by the level's field (NULL keys in no bucket), drop buckets
     under ``min_doc_count``, order (``_count``/``_key``/the level's
-    metric — a bucket without values last — key asc tiebreak), keep
-    ``size``; the rest is
+    metric as served — an empty sum is 0, an empty max orders last —
+    key asc tiebreak), keep ``size``; the rest is
     ``sum_other_doc_count`` and, with ``other_bucket``, one trailing
     ``'__other__'`` bucket over their docs that carries the deeper
     levels folded the same way."""
@@ -433,18 +433,16 @@ def _ref_terms(docs: list[dict], levels: list[dict]) -> dict:
             groups.setdefault(r[lv["field"]], []).append(r)
 
     def metric(rows: list[dict]):
-        # a bucket with no values has no metric: it orders last
+        # a bucket with no values: ES serves an empty sum as 0 and
+        # orders on it; an empty max has no value and orders last
         vals = [r["v"] for r in rows if r["v"] is not None]
         if not vals:
-            return None
+            return 0.0 if lv["metric"] == "sum" else None
         return sum(vals) if lv["metric"] == "sum" else max(vals)
 
     def bucket(key, rows: list[dict]) -> dict:
-        value = metric(rows)
-        if value is None and lv["metric"] == "sum":
-            value = 0.0  # ES serves an empty sum as 0
         out = {"key": key, "doc_count": len(rows),
-               lv["name"] + "_m": {"value": value}}
+               lv["name"] + "_m": {"value": metric(rows)}}
         if deeper:
             out[deeper[0]["name"]] = _ref_terms(rows, deeper)
         return out
@@ -1049,6 +1047,27 @@ def test_terms_order_by_metric(frame):
                   "aggs": {"s": {"stats": {"field": "n_chars"}}}}}
     out = serve.aggs_nested(frame, spec)
     assert out["l"]["buckets"][0]["key"] == "en"  # sum 80 beats fr 60
+
+
+def test_terms_order_by_empty_sum_uses_the_served_zero(spark):
+    """A bucket whose field has no values serves sum 0.0, and orders on
+    that 0.0: p (v NULL) and q (v 0) tie at 0, so key asc keeps p,
+    as ES does. Ordering the NULL sum last kept q."""
+    df = spark.createDataFrame([("p", None), ("q", 0)], "a string, v bigint")
+    spec = {"t": {"terms": {"field": "a", "size": 1,
+                            "order": {"sum_m": "desc"}},
+                  "aggs": {"sum_m": {"sum": {"field": "v"}}}}}
+    out = serve.aggs_nested(df, spec)
+    assert out["t"]["buckets"] == [
+        {"key": "p", "doc_count": 1, "sum_m": {"value": 0.0}}
+    ]
+    assert out["t"]["sum_other_doc_count"] == 1
+    # a stats sum is served the same way
+    spec = {"t": {"terms": {"field": "a", "size": 1,
+                            "order": {"s.sum": "desc"}},
+                  "aggs": {"s": {"stats": {"field": "v"}}}}}
+    out = serve.aggs_nested(df, spec)
+    assert [b["key"] for b in out["t"]["buckets"]] == ["p"]
 
 
 def test_terms_order_nested_per_parent(frame):

@@ -720,3 +720,180 @@ def test_liststate_recent_events_matches_batch_topk(spark, sf_dir):
     }
     assert len(got) > 0
     assert got == want
+
+
+# --- the enrich join of the streaming DAG against a stored CUSTOMERS ---
+
+
+def _customers_changelog(spark, first: int, n: int, path: str) -> None:
+    """CUSTOMERS changelog rows for ids [first, first + n), each id
+    written twice (a create, then an update that wins), appended as
+    parquet files to ``path``."""
+    ids = spark.range(first, first + n)
+    rows = ids.crossJoin(spark.range(2).withColumnRenamed("id", "v")).select(
+        F.col("id").cast("int").alias("id"),
+        F.concat(F.lit("First"), F.col("id")).alias("first_name"),
+        F.concat(F.lit("Last"), F.col("id"), F.lit("v"), F.col("v")).alias("last_name"),
+        F.concat(F.lit("u"), F.col("id"), F.lit("@example.com")).alias("email"),
+        F.lit("F").alias("gender"),
+        F.element_at(
+            F.array(*[F.lit(s) for s in ("bronze", "silver", "gold", "platinum")]),
+            (F.col("id") % 4 + 1).cast("int"),
+        ).alias("club_status"),
+        F.lit("seed").alias("comments"),
+        F.lit("2020-01-01 00:00:00").cast("timestamp").alias("create_ts"),
+        (F.lit("2020-01-01 00:00:00").cast("timestamp") + F.expr("make_interval(0, 0, 0, 0, 0, 0, v)"))
+        .alias("update_ts"),
+        (F.col("id") * 2 + F.col("v")).alias("op_seq"),
+    )
+    rows.write.mode("append").parquet(path)
+
+
+def _ratings_stream(spark, tmp_path, n: int, users: int):
+    """One parquet file of ``n`` ratings for user ids 1..users, and a
+    file stream over its directory."""
+    from kafka_cdc_elasticsearch_pipeline_spark.sources.datagen import ratings_batch
+
+    batch = ratings_batch(spark, n).withColumn(
+        "user_id", (F.col("rating_id") * 7 % users + 1).cast("int")
+    )
+    src = str(tmp_path / "ratings")
+    batch.coalesce(1).write.parquet(src)
+    return batch, spark.readStream.schema(batch.schema).parquet(src)
+
+
+def _one_batch(df, tmp_path, name: str):
+    """Run ``df`` for one availableNow micro-batch; return the rows it
+    delivered and the executed plan of the batch."""
+    got = []
+    q = (
+        df.writeStream.queryName(name)
+        .foreachBatch(lambda b, _: got.extend(b.collect()))
+        .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return got, q._jsq.explainInternal(False)
+
+
+def _n_persistent(spark) -> int:
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def test_enrich_micro_batch_reads_stored_customers(spark, tmp_path):
+    """TABLE CUSTOMERS is built once, with the DAG: a micro-batch of
+    ratings_with_customer_data scans no CUSTOMERS file, reduces
+    nothing on the table side, and broadcasts the micro-batch
+    against the stored table."""
+    from kafka_cdc_elasticsearch_pipeline_spark.plans.pipeline import ratings_pipeline
+
+    cust_dir = str(tmp_path / "customers")
+    _customers_changelog(spark, 1, 2000, cust_dir)
+    customers = spark.read.parquet(cust_dir)
+    batch, stream = _ratings_stream(spark, tmp_path, 60, 2100)
+    before = _n_persistent(spark)
+    dag = ratings_pipeline(stream, customers)
+    stored = _n_persistent(spark) - before
+
+    got, plan = _one_batch(dag["ratings_with_customer_data"], tmp_path, "enrich_stored")
+
+    truth = ratings_pipeline(batch, customers)["ratings_with_customer_data"].collect()
+    assert sorted(got) == sorted(truth) and truth
+    scans = [line for line in plan.splitlines() if "FileScan" in line]
+    assert scans and not [s for s in scans if "first_name" in s], plan
+    assert "Aggregate" not in plan, plan
+    joins = [line for line in plan.splitlines() if "BroadcastHashJoin" in line]
+    assert joins and all("Inner, BuildLeft" in j for j in joins), plan
+    assert stored == 1
+
+
+def test_enrich_micro_batch_ignores_customers_files_added_later(spark, tmp_path):
+    """The semantics the stored table keeps: Spark lists a parquet path
+    when the frame is read, so a CUSTOMERS file added after the DAG is
+    built is never joined, stored table or not."""
+    from kafka_cdc_elasticsearch_pipeline_spark.plans.pipeline import ratings_pipeline
+
+    cust_dir = str(tmp_path / "customers")
+    _customers_changelog(spark, 1, 20, cust_dir)
+    _, stream = _ratings_stream(spark, tmp_path, 80, 40)
+    dag = ratings_pipeline(stream, spark.read.parquet(cust_dir))
+    _customers_changelog(spark, 21, 20, cust_dir)
+
+    got, _ = _one_batch(dag["ratings_with_customer_data"], tmp_path, "enrich_late_file")
+
+    users = {r.user_id for r in got}
+    assert users and users <= set(range(1, 21))
+
+
+def _per_batch_plan(plan: str) -> None:
+    """Today's per-micro-batch enrich plan: CUSTOMERS reduced and
+    broadcast in the batch."""
+    assert "Aggregate" in plan, plan
+    joins = [line for line in plan.splitlines() if "BroadcastHashJoin" in line]
+    assert joins and all("BuildRight" in j for j in joins), plan
+
+
+def test_enrich_keeps_per_batch_plan_for_a_replanned_table(spark, tmp_path):
+    """A Python data source is planned anew in every micro-batch, so its
+    answer may move: the join stores nothing and re-reads it per
+    batch."""
+    import datetime
+
+    from pyspark.sql.datasource import DataSource, DataSourceReader
+
+    from kafka_cdc_elasticsearch_pipeline_spark.plans.pipeline import ratings_pipeline
+
+    class Reader(DataSourceReader):
+        def read(self, partition):
+            ts = datetime.datetime(2020, 1, 1)
+            for i in range(1, 21):
+                yield (i, f"First{i}", f"Last{i}", f"u{i}@example.com", "F",
+                       "platinum", "seed", ts, ts, i)
+
+    class CustomersSource(DataSource):
+        @classmethod
+        def name(cls):
+            return "test_customers_source"
+
+        def schema(self):
+            return (
+                "id int, first_name string, last_name string, email string, "
+                "gender string, club_status string, comments string, "
+                "create_ts timestamp, update_ts timestamp, op_seq long"
+            )
+
+        def reader(self, schema):
+            return Reader()
+
+    spark.dataSource.register(CustomersSource)
+    customers = spark.read.format("test_customers_source").load()
+    batch, stream = _ratings_stream(spark, tmp_path, 40, 30)
+    before = _n_persistent(spark)
+    dag = ratings_pipeline(stream, customers)
+    got, plan = _one_batch(dag["ratings_with_customer_data"], tmp_path, "enrich_pyds")
+
+    assert _n_persistent(spark) == before
+    truth = ratings_pipeline(batch, customers)["ratings_with_customer_data"].collect()
+    assert sorted(got) == sorted(truth) and truth
+    _per_batch_plan(plan)
+
+
+def test_enrich_stores_nothing_with_pinning_disabled(spark, tmp_path, monkeypatch):
+    """``SPARK_GRAFT_PIN_REUSED=0`` governs the stored table too: a
+    fixed CUSTOMERS keeps the per-batch plan."""
+    monkeypatch.setenv("SPARK_GRAFT_PIN_REUSED", "0")
+    from kafka_cdc_elasticsearch_pipeline_spark.plans.pipeline import ratings_pipeline
+
+    cust_dir = str(tmp_path / "customers")
+    _customers_changelog(spark, 1, 20, cust_dir)
+    customers = spark.read.parquet(cust_dir)
+    batch, stream = _ratings_stream(spark, tmp_path, 40, 30)
+    before = _n_persistent(spark)
+    dag = ratings_pipeline(stream, customers)
+    got, plan = _one_batch(dag["ratings_with_customer_data"], tmp_path, "enrich_unpinned")
+
+    assert _n_persistent(spark) == before
+    truth = ratings_pipeline(batch, customers)["ratings_with_customer_data"].collect()
+    assert sorted(got) == sorted(truth) and truth
+    _per_batch_plan(plan)
